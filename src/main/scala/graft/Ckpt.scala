@@ -21,7 +21,7 @@ import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
   *    old generation is always computed first). Steady-state footprint
   *    is therefore ≤ one generation per call site — bounded however
   *    many queries a session runs — instead of growing per invocation.
-  *    Safe because every consumer (Bench repeats, Verify, the oracle
+  *    Safe because every consumer (perfbench passes, Verify, the oracle
   *    dump, the specs) rebuilds a query's DataFrame from its builder
   *    function before executing it; a superseded generation is never
   *    re-executed. Iterative loops whose FINAL plan reads every round

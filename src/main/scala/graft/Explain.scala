@@ -434,7 +434,6 @@ object Explain {
           // then read the final adaptive plan.
           df.collect()
           val plan = df.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
-          if (sys.env.contains("SPARK_GRAFT_AUDIT_DUMP")) println(plan)
           val fb = fallbacks(plan)
           if (fb.isEmpty) s"| $n | clean | — |"
           else { nFallback += 1; s"| $n | FALLBACK | ${fb.mkString(", ")} |" }

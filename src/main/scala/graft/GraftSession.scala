@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for session config shared by Verify, Bench, and tests.
+/** One place for session config shared by the graft mains, perfbench
+  * and tests.
   *
   * Scale rationale: shuffle partitions sized to local cores (the driver
   * runs local[32]); AQE on so skewed shuffles re-plan at runtime — the
@@ -30,24 +31,6 @@ object GraftSession {
   def local(cpus: String): SparkSession = {
     val spark = builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Measurement-only (r14, guide §1): SPARK_GRAFT_STREAM_PROF=1 dumps
-    // every micro-batch's durationMs breakdown (addBatch, walCommit,
-    // commitOffsets, stateOperators commit times) to stderr, so the
-    // x_stream_* fixed-floor block can be attributed to commit-path
-    // machinery vs compute without touching any query. No effect on
-    // results or timing when unset.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROF") &&
-        spark.conf.getOption("spark.graft.streamProfInstalled").isEmpty) {
-      spark.conf.set("spark.graft.streamProfInstalled", "true")
-      spark.streams.addListener(
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          import org.apache.spark.sql.streaming.StreamingQueryListener._
-          override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-          override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-          override def onQueryProgress(e: QueryProgressEvent): Unit =
-            System.err.println("[stream-prof] " + e.progress.json)
-        })
-    }
     spark
   }
 }

@@ -18,7 +18,7 @@ object Verify {
     // sweep caught m3_rowgroup_grid's timed rewrite landing AFTER
     // m3_rowgroup_layout's byte dump purely because the HashMap order
     // moved. Benchmark writers now also use scratch dirs, but the
-    // sweep itself stays order-deterministic like Bench's.
+    // sweep itself stays order-deterministic.
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.contains(name)) }.toSeq.sortBy(_._1)
     // mechanical registry census (stderr, greppable): the single source

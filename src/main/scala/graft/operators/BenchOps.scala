@@ -995,8 +995,7 @@ object BenchOps {
   /** A6 — mean over iterations: the reference's repeated-measurement
     * aggregation (src/pq_fb_ns_data_generator.cc:268-271 accumulates N
     * timing iterations and reports their mean) as a REGISTERED query
-    * over a measurement-rows table, not just bench methodology
-    * ([[graft.Bench]] applies the same discipline to its own timings).
+    * over a measurement-rows table, not just bench methodology.
     * The fixture is deterministic (quarter-step values are exact
     * doubles, so partial-sum order cannot change the aggregate) and
     * shared verbatim with the DuckDB oracle.

@@ -465,47 +465,6 @@ object Dedup {
     }
   }
 
-  /** Near-dup CLUSTER formation — the step an actual dedup pipeline
-    * needs after pairwise detection: connected components over the
-    * verified-pair edge graph (Jaccard ≥ 0.8), then one surviving
-    * representative (min doc_id) per component.
-    *
-    * Components via min-label propagation: every doc starts labeled
-    * with its own id; each round joins labels across edges (both
-    * directions) and keeps the group-wise min, iterating UNTIL A
-    * FIXPOINT (a round that changes no label) — so components of any
-    * diameter converge exactly, not just the diameter ≤ 4 cliques this
-    * corpus plants. At 100 TB-scale component counts you'd switch to
-    * the large-star/small-star alternating algorithm (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC 2014); the
-    * per-round plan shape (edge join + min-agg) is identical.
-    *
-    * Memory contract: each round's labels are cached (they are read
-    * twice: the convergence check and the next round), and the
-    * PREVIOUS round's cache is released as soon as the new round is
-    * materialized; the edge set is released before returning. The
-    * final result is WRITTEN to the fingerprint-keyed on-disk model
-    * ([[clusterModelDir]]) — a distributed sink, because at lake scale
-    * the cluster table is corpus-fraction-sized — so NO cache outlives
-    * the call. PipelineOpsSpec asserts the storage release.
-    *
-    * Each round is ONE Spark job: the previous label rides along as
-    * `old_label` through the union+min aggregation, so the cache-
-    * materializing count doubles as the convergence check — no
-    * separate join against the previous round.
-    *
-    * Output: one row per near-dup cluster — (representative = min
-    * member, cluster size, sorted '|'-joined member list).
-    */
-  private def dbg(msg: => String): Unit =
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_TIMING"))
-      System.err.println(s"[graft-timing] $msg")
-
-  private def timed[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime(); val r = f
-    dbg(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-  }
-
   /** Fingerprint-keyed on-disk location of the cluster model — the
     * dedup analog of the ingest base index ([[ensureBaseIndex]]). At
     * lake scale near-dup cluster MEMBERSHIP is a corpus-fraction-sized
@@ -539,6 +498,38 @@ object Dedup {
     dir
   }
 
+  /** Near-dup CLUSTER formation — the step an actual dedup pipeline
+    * needs after pairwise detection: connected components over the
+    * verified-pair edge graph (Jaccard ≥ 0.8), then one surviving
+    * representative (min doc_id) per component.
+    *
+    * Components via min-label propagation: every doc starts labeled
+    * with its own id; each round joins labels across edges (both
+    * directions) and keeps the group-wise min, iterating UNTIL A
+    * FIXPOINT (a round that changes no label) — so components of any
+    * diameter converge exactly, not just the diameter ≤ 4 cliques this
+    * corpus plants. At 100 TB-scale component counts you'd switch to
+    * the large-star/small-star alternating algorithm (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014); the
+    * per-round plan shape (edge join + min-agg) is identical.
+    *
+    * Memory contract: each round's labels are cached (they are read
+    * twice: the convergence check and the next round), and the
+    * PREVIOUS round's cache is released as soon as the new round is
+    * materialized; the edge set is released before returning. The
+    * final result is WRITTEN to the fingerprint-keyed on-disk model
+    * ([[clusterModelDir]]) — a distributed sink, because at lake scale
+    * the cluster table is corpus-fraction-sized — so NO cache outlives
+    * the call. PipelineOpsSpec asserts the storage release.
+    *
+    * Each round is ONE Spark job: the previous label rides along as
+    * `old_label` through the union+min aggregation, so the cache-
+    * materializing count doubles as the convergence check — no
+    * separate join against the previous round.
+    *
+    * Output: one row per near-dup cluster — (representative = min
+    * member, cluster size, sorted '|'-joined member list).
+    */
   def nearDupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     // The build query is also the artifact writer: it (re)materializes
     // the on-disk cluster model and returns a scan of it, so the frame
@@ -654,13 +645,12 @@ object Dedup {
       // wrap negative and make limit() throw instead of falling back to
       // the distributed loop.
       val cap = math.min(localMax, (Int.MaxValue - 1).toLong).toInt
-      val collected = timed("edge collect")(
-        edgePlan.limit(cap + 1).collect())
+      val collected = edgePlan.limit(cap + 1).collect()
       if (collected.length <= cap) {
         // model-sized graph: union-find on the driver, then persist the
         // same two layouts the distributed path writes so every
         // consumer joins the artifact regardless of which path built it
-        val local = timed("localUnionFind")(localClusters(spark, collected))
+        val local = localClusters(spark, collected)
         local.select(
             explode(split(col("members"), "\\|").cast("array<bigint>")).as("doc_id"),
             col("keep_id"))
@@ -670,7 +660,7 @@ object Dedup {
       }
     }
     val edges = edgePlan.cache()
-    timed("edge materialize")(edges.count())
+    edges.count()
     val bidir = edges.union(edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
     // The propagation loop and cluster aggregation operate on the LABEL
     // set (candidate docs only — orders of magnitude smaller than the
@@ -693,17 +683,14 @@ object Dedup {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val labels =
-        if (algo == "starcontract")
-          timed("starContractLabels")(starContractLabels(bidir))
-        else timed("fixpointLabels")(fixpointLabels(bidir))
+        if (algo == "starcontract") starContractLabels(bidir) else fixpointLabels(bidir)
       // Both layouts are WRITTEN, never collected: on the distributed
       // path the cluster table is corpus-fraction-sized at lake scale,
       // so materialization must be a distributed sink (the writes also
       // force the label cache, which is then released).
-      timed("memberWrite")(
-        labels.select(col("doc_id"), col("label").as("keep_id"))
-          .write.mode("overwrite").parquet(s"$dir/members"))
-      timed("clusterWrite")(labels
+      labels.select(col("doc_id"), col("label").as("keep_id"))
+        .write.mode("overwrite").parquet(s"$dir/members")
+      labels
         .groupBy("label")
         .agg(sort_array(collect_list(col("doc_id"))).as("members"))
         .select(
@@ -711,7 +698,7 @@ object Dedup {
           size(col("members")).as("cluster_size"),
           concat_ws("|", col("members").cast("array<string>")).as("members"))
         .orderBy("keep_id")
-        .write.mode("overwrite").parquet(s"$dir/clusters"))
+        .write.mode("overwrite").parquet(s"$dir/clusters")
       labels.unpersist()
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
@@ -806,13 +793,11 @@ object Dedup {
         .cache()
       // ONE job: materializes `next` and decides convergence (labels
       // only ever decrease, so changed ⇔ new < old)
-      changed = timed(s"round $rounds")(
-        next.where(col("label") < col("old_label")).count())
+      changed = next.where(col("label") < col("old_label")).count()
       labels.unpersist() // superseded round: release executor storage
       labels = next
       rounds += 1
     }
-    dbg(s"fixpoint rounds: $rounds")
     labels
   }
 

@@ -13,7 +13,7 @@ import scala.util.Random
   * emit result DataFrames with the reference's CSV columns (FIXTURES.md
   * §B). Timing = System.nanoTime around Spark actions (the reference's
   * std::chrono spans, src/metadata_benchmark.cc:183-188); first-run JIT
-  * warmup is the caller's concern (see graft.Bench).
+  * warmup is the caller's concern.
   */
 object BenchRunners {
 

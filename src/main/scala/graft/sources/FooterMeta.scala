@@ -3,8 +3,9 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
 import scala.jdk.CollectionConverters._
 
@@ -76,75 +77,82 @@ object FooterMeta {
     else Seq(p)
   }
 
+  /** One file's decoded footer: its path, length, metadata, and the
+    * nanoseconds spent opening the file and decoding the footer.
+    */
+  private final case class Footer(path: String, bytes: Long, meta: ParquetMetadata, decodeNs: Long)
+
+  /** The distributed fan-out every footer scan here shares: expand
+    * `paths` to parquet files and, in each partition, open one reader
+    * per file, decode its footer, close the reader and hand the footer
+    * to `rows`. The session conf is serialized to the executors — a
+    * fresh Configuration() would drop s3a/hdfs credentials on a real
+    * deployment (SessionConf scaladoc).
+    */
+  private def footerScan[T: Encoder](spark: SparkSession, paths: Seq[String])(
+      rows: Footer => Iterable[T]): Dataset[T] = {
+    val files = paths.flatMap(parquetFiles(spark.sparkContext.hadoopConfiguration, _))
+    val confEntries = SessionConf.entries(spark)
+    spark.createDataset(files)(Encoders.STRING).mapPartitions { iter =>
+      val conf = SessionConf.build(confEntries)
+      iter.flatMap { f =>
+        val t0 = System.nanoTime()
+        val in = HadoopInputFile.fromPath(new Path(f), conf)
+        val reader = ParquetFileReader.open(in)
+        val footer = try {
+          val meta = reader.getFooter
+          Footer(f, in.getLength, meta, System.nanoTime() - t0)
+        } finally reader.close()
+        // a List, not the scans' ArrayBuffers: with ArrayBuffer rows every
+        // perfbench wide_read operation, not only these scans, measured
+        // about 5 % slower
+        rows(footer).toList
+      }
+    }
+  }
+
   /** S4 — footer-only scan with decode timings, one row per file. */
   def fileMeta(spark: SparkSession, paths: Seq[String]): Dataset[FileMetaRow] = {
     import spark.implicits._
-    val files = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.flatMap(parquetFiles(conf, _))
-    }
-    // session conf serialized to executors — a fresh Configuration() would
-    // drop s3a/hdfs credentials on a real deployment (SessionConf scaladoc)
-    val confEntries = SessionConf.entries(spark)
-    spark.createDataset(files).mapPartitions { iter =>
-      val conf = SessionConf.build(confEntries)
-      iter.map { f =>
-        val t0 = System.nanoTime()
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
-        val footer = reader.getFooter
-        val t1 = System.nanoTime()
-        try {
-          val schema = footer.getFileMetaData.getSchema
-          // schema build stage (GetSchema analog): touch every leaf field
-          val cols = schema.getColumns.asScala.map(_.getPrimitiveType.getName).size
-          val t2 = System.nanoTime()
-          FileMetaRow(
-            path = f,
-            num_row_groups = footer.getBlocks.size(),
-            num_columns = cols,
-            num_rows = footer.getBlocks.asScala.map(_.getRowCount).sum,
-            file_bytes = new Path(f).getFileSystem(conf).getFileStatus(new Path(f)).getLen,
-            created_by = footer.getFileMetaData.getCreatedBy,
-            footer_decode_us = (t1 - t0) / 1e3,
-            schema_build_us = (t2 - t1) / 1e3)
-        } finally reader.close()
-      }
+    footerScan(spark, paths) { ft =>
+      val t1 = System.nanoTime()
+      val schema = ft.meta.getFileMetaData.getSchema
+      // schema build stage (GetSchema analog): touch every leaf field
+      val cols = schema.getColumns.asScala.map(_.getPrimitiveType.getName).size
+      val t2 = System.nanoTime()
+      Seq(FileMetaRow(
+        path = ft.path,
+        num_row_groups = ft.meta.getBlocks.size(),
+        num_columns = cols,
+        num_rows = ft.meta.getBlocks.asScala.map(_.getRowCount).sum,
+        file_bytes = ft.bytes,
+        created_by = ft.meta.getFileMetaData.getCreatedBy,
+        footer_decode_us = ft.decodeNs / 1e3,
+        schema_build_us = (t2 - t1) / 1e3))
     }
   }
 
   /** S5 — column-chunk statistics scan, one row per (row group, chunk). */
   def chunkStats(spark: SparkSession, paths: Seq[String]): Dataset[ChunkStatRow] = {
     import spark.implicits._
-    val files = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.flatMap(parquetFiles(conf, _))
-    }
-    val confEntries = SessionConf.entries(spark)
-    spark.createDataset(files).mapPartitions { iter =>
-      val conf = SessionConf.build(confEntries)
-      iter.flatMap { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
-        try {
-          val footer = reader.getFooter
-          footer.getBlocks.asScala.zipWithIndex.flatMap { case (block, rg) =>
-            block.getColumns.asScala.map { chunk =>
-              val stats = chunk.getStatistics
-              ChunkStatRow(
-                path = f,
-                row_group = rg,
-                column = chunk.getPath.toDotString,
-                codec = chunk.getCodec.toString,
-                compressed_bytes = chunk.getTotalSize,
-                uncompressed_bytes = chunk.getTotalUncompressedSize,
-                num_values = chunk.getValueCount,
-                has_min_max = stats != null && stats.hasNonNullValue,
-                null_count = if (stats == null) -1L else stats.getNumNulls,
-                encodings = chunk.getEncodings.asScala.map(_.toString).toSeq.sorted.mkString("|"),
-                dict_encoded = chunk.getEncodings.asScala.exists(e =>
-                  e.toString.contains("DICTIONARY")))
-            }
-          }.toList
-        } finally reader.close()
+    footerScan(spark, paths) { ft =>
+      ft.meta.getBlocks.asScala.zipWithIndex.flatMap { case (block, rg) =>
+        block.getColumns.asScala.map { chunk =>
+          val stats = chunk.getStatistics
+          ChunkStatRow(
+            path = ft.path,
+            row_group = rg,
+            column = chunk.getPath.toDotString,
+            codec = chunk.getCodec.toString,
+            compressed_bytes = chunk.getTotalSize,
+            uncompressed_bytes = chunk.getTotalUncompressedSize,
+            num_values = chunk.getValueCount,
+            has_min_max = stats != null && stats.hasNonNullValue,
+            null_count = if (stats == null) -1L else stats.getNumNulls,
+            encodings = chunk.getEncodings.asScala.map(_.toString).toSeq.sorted.mkString("|"),
+            dict_encoded = chunk.getEncodings.asScala.exists(e =>
+              e.toString.contains("DICTIONARY")))
+        }
       }
     }
   }
@@ -166,30 +174,19 @@ object FooterMeta {
   def chunkRangesLong(
       spark: SparkSession, paths: Seq[String], column: String): Dataset[ChunkRangeRow] = {
     import spark.implicits._
-    val files = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.flatMap(parquetFiles(conf, _))
-    }
-    val confEntries = SessionConf.entries(spark)
-    spark.createDataset(files).mapPartitions { iter =>
-      val conf = SessionConf.build(confEntries)
-      iter.flatMap { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
-        try {
-          reader.getFooter.getBlocks.asScala.zipWithIndex.map { case (block, rg) =>
-            val chunk = block.getColumns.asScala
-              .find(_.getPath.toDotString == column)
-              .getOrElse(throw new IllegalArgumentException(
-                s"column $column not found in $f"))
-            chunk.getStatistics match {
-              case s: org.apache.parquet.column.statistics.LongStatistics
-                  if s.hasNonNullValue =>
-                ChunkRangeRow(f, rg, s.getMin, s.getMax, block.getRowCount)
-              case other => throw new IllegalArgumentException(
-                s"column $column in $f has no usable INT64 statistics: $other")
-            }
-          }.toList
-        } finally reader.close()
+    footerScan(spark, paths) { ft =>
+      ft.meta.getBlocks.asScala.zipWithIndex.map { case (block, rg) =>
+        val chunk = block.getColumns.asScala
+          .find(_.getPath.toDotString == column)
+          .getOrElse(throw new IllegalArgumentException(
+            s"column $column not found in ${ft.path}"))
+        chunk.getStatistics match {
+          case s: org.apache.parquet.column.statistics.LongStatistics
+              if s.hasNonNullValue =>
+            ChunkRangeRow(ft.path, rg, s.getMin, s.getMax, block.getRowCount)
+          case other => throw new IllegalArgumentException(
+            s"column $column in ${ft.path} has no usable INT64 statistics: $other")
+        }
       }
     }
   }
@@ -205,23 +202,12 @@ object FooterMeta {
     */
   def fieldIds(spark: SparkSession, paths: Seq[String]): Dataset[FieldIdRow] = {
     import spark.implicits._
-    val files = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.flatMap(parquetFiles(conf, _))
-    }
-    val confEntries = SessionConf.entries(spark)
-    spark.createDataset(files).mapPartitions { iter =>
-      val conf = SessionConf.build(confEntries)
-      iter.flatMap { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
-        try {
-          val fileName = f.substring(f.lastIndexOf('/') + 1)
-          reader.getFooter.getFileMetaData.getSchema.getColumns.asScala.map { cd =>
-            val id = cd.getPrimitiveType.getId
-            FieldIdRow(fileName, cd.getPath.mkString("."),
-              if (id == null) -1 else id.intValue())
-          }.toList
-        } finally reader.close()
+    footerScan(spark, paths) { ft =>
+      val fileName = ft.path.substring(ft.path.lastIndexOf('/') + 1)
+      ft.meta.getFileMetaData.getSchema.getColumns.asScala.map { cd =>
+        val id = cd.getPrimitiveType.getId
+        FieldIdRow(fileName, cd.getPath.mkString("."),
+          if (id == null) -1 else id.intValue())
       }
     }
   }
@@ -238,58 +224,47 @@ object FooterMeta {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.LogicalTypeAnnotation._
     import spark.implicits._
-    val files = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.flatMap(parquetFiles(conf, _))
-    }
-    val confEntries = SessionConf.entries(spark)
-    spark.createDataset(files).mapPartitions { iter =>
-      val conf = SessionConf.build(confEntries)
-      iter.flatMap { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
-        try {
-          val schema = reader.getFooter.getFileMetaData.getSchema
-          val fileName = f.substring(f.lastIndexOf('/') + 1)
-          schema.getColumns.asScala.map { cd =>
-            val pt = cd.getPrimitiveType
-            // parquet-mr's enum says BINARY; the format spec (and every
-            // second engine, DuckDB included) says BYTE_ARRAY
-            val physicalName = pt.getPrimitiveTypeName.toString match {
-              case "BINARY" => "BYTE_ARRAY"
-              case x => x
-            }
-            val base = LogicalTypeRow(
-              file = fileName,
-              column = cd.getPath.mkString("."),
-              physical = physicalName,
-              type_length = math.max(0, pt.getTypeLength),
-              logical = "NONE", precision = -1, scale = -1,
-              unit = "na", utc = -1, bit_width = -1, signed = -1)
-            pt.getLogicalTypeAnnotation match {
-              case null => base
-              case d: DecimalLogicalTypeAnnotation =>
-                base.copy(logical = "DECIMAL",
-                  precision = d.getPrecision, scale = d.getScale)
-              case t: TimestampLogicalTypeAnnotation =>
-                base.copy(logical = "TIMESTAMP", unit = t.getUnit.toString,
-                  utc = if (t.isAdjustedToUTC) 1 else 0)
-              case t: TimeLogicalTypeAnnotation =>
-                base.copy(logical = "TIME", unit = t.getUnit.toString,
-                  utc = if (t.isAdjustedToUTC) 1 else 0)
-              case i: IntLogicalTypeAnnotation =>
-                base.copy(logical = "INT", bit_width = i.getBitWidth,
-                  signed = if (i.isSigned) 1 else 0)
-              case _: DateLogicalTypeAnnotation => base.copy(logical = "DATE")
-              case _: UUIDLogicalTypeAnnotation => base.copy(logical = "UUID")
-              case _: JsonLogicalTypeAnnotation => base.copy(logical = "JSON")
-              case _: BsonLogicalTypeAnnotation => base.copy(logical = "BSON")
-              case _: StringLogicalTypeAnnotation => base.copy(logical = "STRING")
-              case _: EnumLogicalTypeAnnotation => base.copy(logical = "ENUM")
-              case other: LogicalTypeAnnotation =>
-                base.copy(logical = other.toString)
-            }
-          }.toList
-        } finally reader.close()
+    footerScan(spark, paths) { ft =>
+      val schema = ft.meta.getFileMetaData.getSchema
+      val fileName = ft.path.substring(ft.path.lastIndexOf('/') + 1)
+      schema.getColumns.asScala.map { cd =>
+        val pt = cd.getPrimitiveType
+        // parquet-mr's enum says BINARY; the format spec (and every
+        // second engine, DuckDB included) says BYTE_ARRAY
+        val physicalName = pt.getPrimitiveTypeName.toString match {
+          case "BINARY" => "BYTE_ARRAY"
+          case x => x
+        }
+        val base = LogicalTypeRow(
+          file = fileName,
+          column = cd.getPath.mkString("."),
+          physical = physicalName,
+          type_length = math.max(0, pt.getTypeLength),
+          logical = "NONE", precision = -1, scale = -1,
+          unit = "na", utc = -1, bit_width = -1, signed = -1)
+        pt.getLogicalTypeAnnotation match {
+          case null => base
+          case d: DecimalLogicalTypeAnnotation =>
+            base.copy(logical = "DECIMAL",
+              precision = d.getPrecision, scale = d.getScale)
+          case t: TimestampLogicalTypeAnnotation =>
+            base.copy(logical = "TIMESTAMP", unit = t.getUnit.toString,
+              utc = if (t.isAdjustedToUTC) 1 else 0)
+          case t: TimeLogicalTypeAnnotation =>
+            base.copy(logical = "TIME", unit = t.getUnit.toString,
+              utc = if (t.isAdjustedToUTC) 1 else 0)
+          case i: IntLogicalTypeAnnotation =>
+            base.copy(logical = "INT", bit_width = i.getBitWidth,
+              signed = if (i.isSigned) 1 else 0)
+          case _: DateLogicalTypeAnnotation => base.copy(logical = "DATE")
+          case _: UUIDLogicalTypeAnnotation => base.copy(logical = "UUID")
+          case _: JsonLogicalTypeAnnotation => base.copy(logical = "JSON")
+          case _: BsonLogicalTypeAnnotation => base.copy(logical = "BSON")
+          case _: StringLogicalTypeAnnotation => base.copy(logical = "STRING")
+          case _: EnumLogicalTypeAnnotation => base.copy(logical = "ENUM")
+          case other: LogicalTypeAnnotation =>
+            base.copy(logical = other.toString)
+        }
       }
     }
   }

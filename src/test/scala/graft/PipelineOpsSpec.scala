@@ -313,7 +313,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // r14 leak guard, extended to every checkpointing query family (the
     // r13 verdict's ask): each Ckpt.pin site releases its previous
     // generation, so steady-state persisted-RDD count is CONSTANT under
-    // repeated invocations — exactly Bench's repeat pattern. A bare
+    // repeated invocations — exactly a benchmark's repeat pattern. A bare
     // localCheckpoint would grow the set by one per site per run and
     // fail here.
     val names = Seq(

@@ -36,6 +36,33 @@ class WorkDirsLintSpec extends AnyFunSuite {
         "route staging through graft.WorkDirs:\n  " + hits.mkString("\n  "))
   }
 
+  // the whole environment surface of the engine: the local-run core
+  // count, Verify's subset filter and repeat pass, and the work-dir root
+  private val allowedEnv =
+    Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY", "SPARK_GRAFT_REPEAT", "GRAFT_WORK_DIR")
+  private val envRead = raw"""sys\.env|System\.getenv""".r
+  private val envName =
+    raw"""(?:sys\.env(?:\.(?:get|getOrElse|contains|apply))?|System\.getenv)\s*\(\s*"([^"]*)"""".r
+
+  test("src/main reads no environment variable outside the fixed set") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root),
+      s"expected to run from repo root, cwd=${Paths.get("").toAbsolutePath}")
+    val hits = for {
+      f <- scalaFiles(root)
+      (line, idx) <- Files.readAllLines(f).asScala.zipWithIndex
+      if !line.trim.startsWith("//") && !line.trim.startsWith("*")
+      reads = envRead.findAllIn(line).size
+      if reads > 0
+      names = envName.findAllMatchIn(line).map(_.group(1)).toSeq
+      // a read whose name is not a literal on the same line cannot be checked
+      if names.size < reads || names.exists(n => !allowedEnv.contains(n))
+    } yield s"$f:${idx + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      s"environment variables outside ${allowedEnv.toSeq.sorted.mkString(", ")} — " +
+        "make it an argument or a session conf key instead:\n  " + hits.mkString("\n  "))
+  }
+
   test("WorkDirs resolution: conf overrides env overrides the checkout default") {
     val spark = TestSpark.spark
     val dflt = WorkDirs.root(spark)

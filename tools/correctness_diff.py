@@ -1,8 +1,7 @@
 #!/usr/bin/env python3
 """Round-over-round diff of the driver's CORRECTNESS_r{N}.json artifacts.
 
-The bench side has tools/bench_diff.py; this is its correctness twin:
-surface queries that regressed (hash-green -> anything else), newly
+Surfaces queries that regressed (hash-green -> anything else), newly
 appeared, disappeared, or changed oracle class (oracled vs rows-only),
 so a round's first minutes start from "what actually changed" instead
 of re-reading two 200-entry JSON maps by hand.

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Direct-JVM launcher for graft mains (Verify/Bench/Explain) that
+# Direct-JVM launcher for graft mains (Verify/BenchmarkSuite/Explain) that
 # matches build.sbt's forked-run JVM EXACTLY — same add-opens set
 # (Spark 4.x on JDK 17 needs sun.util.calendar etc.; a partial list
 # silently errors individual queries, e.g. k6_sorted_write's
