@@ -3,8 +3,6 @@ package graft
 import graft.sources.{FooterMeta, WideTableGen}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -42,18 +40,15 @@ object BaselineCompare {
     import org.apache.parquet.hadoop.ParquetFileWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     val out = file.stripSuffix(".parquet") + "_bare.parquet"
-    val in = HadoopInputFile.fromPath(new Path(file), conf)
-    val reader = ParquetFileReader.open(in)
-    try {
-      val footer = reader.getFooter
+    FooterMeta.withReader(conf, file) { reader =>
       val writer = new ParquetFileWriter(
         HadoopOutputFile.fromPath(new Path(out), conf),
-        footer.getFileMetaData.getSchema, ParquetFileWriter.Mode.OVERWRITE,
+        reader.getFooter.getFileMetaData.getSchema, ParquetFileWriter.Mode.OVERWRITE,
         128L * 1024 * 1024, 0)
       writer.start()
-      writer.appendFile(in)
+      reader.appendTo(writer)
       writer.end(java.util.Collections.emptyMap[String, String]())
-    } finally reader.close()
+    }
     out
   }
 
@@ -90,18 +85,14 @@ object BaselineCompare {
     }.toMap
 
     def decodeOnce(file: String): (Double, Double, Int, Int, Boolean) = {
-      val t0 = System.nanoTime()
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-      val footer = reader.getFooter
+      val ft = FooterMeta.footer(conf, file)
       val t1 = System.nanoTime()
-      try {
-        val cols = footer.getFileMetaData.getSchema.getColumns.asScala.size
-        val t2 = System.nanoTime()
-        val hasStats = footer.getBlocks.asScala.exists(
-          _.getColumns.asScala.exists(c =>
-            c.getStatistics != null && c.getStatistics.hasNonNullValue))
-        ((t1 - t0) / 1e6, (t2 - t1) / 1e6, cols, footer.getBlocks.size(), !hasStats)
-      } finally reader.close()
+      val cols = ft.meta.getFileMetaData.getSchema.getColumns.asScala.size
+      val t2 = System.nanoTime()
+      val hasStats = ft.meta.getBlocks.asScala.exists(
+        _.getColumns.asScala.exists(c =>
+          c.getStatistics != null && c.getStatistics.hasNonNullValue))
+      (ft.decodeNs / 1e6, (t2 - t1) / 1e6, cols, ft.meta.getBlocks.size(), !hasStats)
     }
 
     // phase 2: JIT/page-cache warmup over every width, then interleaved
@@ -116,18 +107,7 @@ object BaselineCompare {
       val decodeMs = median(samples.map(_._1))
       val decodeMinMs = samples.map(_._1).min
       val schemaMs = median(samples.map(_._2))
-      // Thrift footer length from the trailer: [footer][4B len][PAR1]
-      val hp = new Path(files(nc))
-      val fs = hp.getFileSystem(conf)
-      val in = fs.open(hp)
-      val footerBytes = try {
-        val size = fs.getFileStatus(hp).getLen
-        in.seek(size - 8)
-        val b = new Array[Byte](4)
-        in.readFully(b)
-        java.lang.Integer.toUnsignedLong(
-          (b(3) & 0xff) << 24 | (b(2) & 0xff) << 16 | (b(1) & 0xff) << 8 | (b(0) & 0xff))
-      } finally in.close()
+      val footerBytes = FooterMeta.footerLength(conf, files(nc))
       val (_, _, cols, rowGroups, statsOff) = samples.head
       (nc, cols, rowGroups, statsOff, decodeMs, schemaMs, footerBytes, decodeMinMs)
     }
@@ -226,12 +206,13 @@ object BaselineCompare {
     md.append(
       f"""
          |Reading the numbers:
-         |- The ~$overhead%.0f ms at 10 columns is constant per-open overhead (file
-         |  open + reader init + checksum read), which the reference's in-memory
+         |- The ~$overhead%.2f ms at 10 columns is constant per-open overhead (file
+         |  open, read-options build, footer read), which the reference's in-memory
          |  ParseMetaData loop never pays. Marginal Thrift decode is therefore
-         |  ~${r2._5 - overhead}%.1f ms @2000 / ~${r3._5 - overhead}%.1f ms @3000 — the pure-parse comparison is
-         |  even more favorable than the headline ratio, and explains why our
-         |  2000→3000 slope looks sub-linear.
+         |  ~${r2._5 - overhead}%.1f ms @2000 / ~${r3._5 - overhead}%.1f ms @3000. This constant was ~7 ms
+         |  while each open went through parquet-hadoop's one-argument open, which
+         |  loads a default Hadoop conf per call; `FooterMeta.footer` builds the
+         |  read options from the given conf instead.
          |- Our footer is larger per column (~${r2._7 / 2000}%d B/col vs the reference's ~20):
          |  modern parquet-mr also records encoding_stats, size statistics and
          |  page-index offsets per chunk, which parquet-cpp 2023 did not. The

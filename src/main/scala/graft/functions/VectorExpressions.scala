@@ -281,6 +281,10 @@ object VectorExpressions {
       books: Array[Array[Array[Double]]], bc2: Array[Array[Double]],
       subDim: Int, residual: Boolean,
       withDist: Boolean): org.apache.spark.sql.catalyst.InternalRow = {
+    // the subspace loops index v up to books.length * subDim unchecked
+    require(v.numElements() >= books.length * subDim,
+      s"ivf_pq_encode: vector has ${v.numElements()} elements, the codebooks need " +
+        s"${books.length * subDim} (${books.length} subspaces x $subDim)")
     var listId = -1
     var bestD = 0.0
     var j = 0

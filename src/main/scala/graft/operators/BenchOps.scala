@@ -333,9 +333,6 @@ object BenchOps {
     * pins the page counts arithmetically (ceil(rows/100) vs 1).
     */
   def m7PageIndex(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import spark.implicits._
     val base = spark.range(0L, PageIdxRows, 1L, 1)
       .select(col("id"),
@@ -359,12 +356,7 @@ object BenchOps {
         .option("parquet.page.size", (16 * 1024 * 1024).toString)
         .parquet(path)
       val file = FooterMeta.parquetFiles(conf, path).head
-      // Use the SESSION hadoop conf (same as FooterMeta.parquetFiles one
-      // line up) — a fresh Configuration() loses s3a/hdfs credentials
-      // when workRoot resolves to a non-default filesystem.
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(file), conf))
-      try {
+      FooterMeta.withReader(conf, file) { reader =>
         val blocks = reader.getFooter.getBlocks
         import scala.jdk.CollectionConverters._
         val chunks = blocks.asScala.flatMap(_.getColumns.asScala).toSeq
@@ -377,7 +369,7 @@ object BenchOps {
             .map(_.getPageCount).getOrElse(0)
         }.sum
         (name, blocks.size, nChunks, withCIndex, withStats, pagesCol0)
-      } finally reader.close()
+      }
     }
     val facts = rows.toDF("config", "n_row_groups", "n_chunks",
       "chunks_with_page_index", "chunks_with_stats", "n_pages_col0")
@@ -811,19 +803,14 @@ object BenchOps {
   /** (bloom on k?, bloom on v?) read from the written file's footer. */
   private[graft] def bloomFlags(spark: SparkSession, path: String): (Boolean, Boolean) = {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(path).getFileSystem(conf)
     val part = fs.listStatus(new Path(path)).map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).minBy(_.getName)
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(part, conf))
-    try {
-      val m = reader.getFooter.getBlocks.get(0).getColumns.asScala
-        .map(c => c.getPath.toDotString -> (c.getBloomFilterOffset >= 0)).toMap
-      (m("k"), m("v"))
-    } finally reader.close()
+    val m = FooterMeta.footer(conf, part.toString).meta.getBlocks.get(0).getColumns.asScala
+      .map(c => c.getPath.toDotString -> (c.getBloomFilterOffset >= 0)).toMap
+    (m("k"), m("v"))
   }
 
   /** Compacted-output file count, exposed for the spec. */
@@ -970,22 +957,8 @@ object BenchOps {
       if (fs.getFileStatus(hp).isDirectory) fs.getContentSummary(hp).getLength
       else fs.getFileStatus(hp).getLen
     }
-    // footer bytes per source file (Thrift length lives in the 8-byte
-    // trailer: [footer][4B length][PAR1])
-    val footerBytes = paths.map { p =>
-      val file = FooterMeta.parquetFiles(conf, p).head
-      val hp = new org.apache.hadoop.fs.Path(file)
-      val fs = hp.getFileSystem(conf)
-      val in = fs.open(hp)
-      try {
-        val size = fs.getFileStatus(hp).getLen
-        in.seek(size - 8)
-        val b = new Array[Byte](4)
-        in.readFully(b)
-        java.lang.Integer.toUnsignedLong(
-          (b(3) & 0xff) << 24 | (b(2) & 0xff) << 16 | (b(1) & 0xff) << 8 | (b(0) & 0xff))
-      } finally in.close()
-    }
+    val footerBytes =
+      paths.map(p => FooterMeta.footerLength(conf, FooterMeta.parquetFiles(conf, p).head))
     import spark.implicits._
     val nChunks = stats.count()
     Seq((tables.mkString("|"), footerBytes.sum, len(sidecarPath), nChunks))

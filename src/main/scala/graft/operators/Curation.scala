@@ -2389,15 +2389,14 @@ object Curation {
     require(audit.getLong(0) == VacuumOrphans.size,
       s"vacuum audit count ${audit.getLong(0)} != staged ${VacuumOrphans.size} — " +
         "unknown files in orphan set; refusing to delete")
-    // distributed delete: each partition removes its own slice.
-    // Session conf serialized to executors via the shared helper — a fresh
-    // Configuration() on the executor loses s3a/hdfs credentials set on
-    // the session, and the delete would fail on a non-default filesystem.
-    val confEntries = graft.sources.SessionConf.entries(spark)
+    // distributed delete: each partition removes its own slice, through
+    // the session conf shipped to the executors — a fresh Configuration()
+    // there loses s3a/hdfs credentials set on the session, and the delete
+    // would fail on a non-default filesystem.
+    val shipped = graft.sources.FooterMeta.sessionConf(spark)
     orphanFiles.select("path").foreachPartition {
       (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val hc = graft.sources.SessionConf.build(confEntries)
-        val pfs = new Path(dir).getFileSystem(hc)
+        val pfs = new Path(dir).getFileSystem(shipped.value)
         rows.foreach(r => pfs.delete(
           new Path(java.net.URI.create(r.getString(0))), false))
     }

@@ -1,13 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Random
+import scala.util.control.NonFatal
 
 /** The reference's benchmark executables re-expressed as Spark jobs that
   * emit result DataFrames with the reference's CSV columns (FIXTURES.md
@@ -40,15 +38,11 @@ object BenchRunners {
     val conf = spark.sparkContext.hadoopConfiguration
     val file = FooterMeta.parquetFiles(conf, p).head
     def once(): (Double, Double, Long) = {
-      val t0 = System.nanoTime()
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-      val footer = reader.getFooter
+      val ft = FooterMeta.footer(conf, file)
       val t1 = System.nanoTime()
-      try {
-        val nCols = footer.getFileMetaData.getSchema.getColumns.asScala.size
-        val t2 = System.nanoTime()
-        ((t1 - t0) / 1e3, (t2 - t1) / 1e3, nCols.toLong)
-      } finally reader.close()
+      val nCols = ft.meta.getFileMetaData.getSchema.getColumns.asScala.size
+      val t2 = System.nanoTime()
+      (ft.decodeNs / 1e3, (t2 - t1) / 1e3, nCols.toLong)
     }
     once()
     val samples = (1 to 5).map(_ => once())
@@ -57,7 +51,9 @@ object BenchRunners {
   }
 
   /** True when `path` already holds a generated wide table with exactly
-    * `nc` fields and `numRows` total rows. WideTableGen is deterministic
+    * `nc` fields and `numRows` total rows, in exactly one file when
+    * `singleFile` (a fixture written before its generator went to one
+    * partition must be rebuilt, not reused). WideTableGen is deterministic
     * (fixed seed), so a matching file IS the file a regeneration would
     * produce — the metadata benchmarks measure footer DECODE, and the
     * reference likewise generates each grid file once and then times
@@ -65,31 +61,27 @@ object BenchRunners {
     * an identical rewrite keeps the measured quantity honest while
     * cutting the 1000-col write out of every repeat.
     */
-  private def wideFileMatches(
-      spark: SparkSession, path: String, nc: Int, numRows: Long): Boolean = {
-    val hconf = spark.sparkContext.hadoopConfiguration
+  private def wideFileMatches(spark: SparkSession, path: String, nc: Int, numRows: Long,
+      singleFile: Boolean = false): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)
     try {
-      if (!p.getFileSystem(hconf).exists(p)) return false
-      val files = FooterMeta.parquetFiles(hconf, path)
-      if (files.isEmpty) return false
-      val conf = hconf
+      if (!p.getFileSystem(conf).exists(p)) return false
+      val files = FooterMeta.parquetFiles(conf, path)
+      if (files.isEmpty || (singleFile && files.size != 1)) return false
       var totalRows = 0L
       var fieldCount = -1
       files.foreach { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
-        try {
-          val footer = reader.getFooter
-          fieldCount = footer.getFileMetaData.getSchema.getFieldCount
-          totalRows += footer.getBlocks.asScala.map(_.getRowCount).sum
-        } finally reader.close()
+        val footer = FooterMeta.footer(conf, f).meta
+        fieldCount = footer.getFileMetaData.getSchema.getFieldCount
+        totalRows += footer.getBlocks.asScala.map(_.getRowCount).sum
       }
       fieldCount == nc && totalRows == numRows
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
   }
 
   /** One throwaway footer open before any timed measurement: the first
-    * ParquetFileReader.open in a JVM pays parquet-hadoop class loading
+    * footer open in a JVM pays parquet-hadoop class loading
     * (~60 ms observed), which would otherwise land entirely on the first
     * grid row.
     */
@@ -230,20 +222,17 @@ object BenchRunners {
     val rows = numColsList.map { nc =>
       val path = s"$workDir/meta_bench_${nc}cols" // shares files with chunksAndPages
       val file = FooterMeta.parquetFiles(conf, path).head
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-      try {
-        val footer = reader.getFooter
-        val t0 = System.nanoTime()
-        var withStats = 0
-        footer.getBlocks.asScala.foreach { b =>
-          b.getColumns.asScala.foreach { c =>
-            val s = c.getStatistics
-            if (s != null && s.hasNonNullValue) withStats += 1
-          }
+      val footer = FooterMeta.footer(conf, file).meta
+      val t0 = System.nanoTime()
+      var withStats = 0
+      footer.getBlocks.asScala.foreach { b =>
+        b.getColumns.asScala.foreach { c =>
+          val s = c.getStatistics
+          if (s != null && s.hasNonNullValue) withStats += 1
         }
-        val statsUs = (System.nanoTime() - t0) / 1e3
-        (nc, footer.getBlocks.size(), statsUs, dirBytes(spark, path), withStats > 0)
-      } finally reader.close()
+      }
+      val statsUs = (System.nanoTime() - t0) / 1e3
+      (nc, footer.getBlocks.size(), statsUs, dirBytes(spark, path), withStats > 0)
     }
     rows.toDF("num_columns", "num_row_groups", "stats_decode_time_us",
       "size_bytes", "stats_enabled")
@@ -311,10 +300,8 @@ object BenchRunners {
       val sizeMb = dirBytes(spark, path) / 1024.0 / 1024.0
       // actual row-group count from the footer — evidence the axis varied
       val nRg = {
-        val file = FooterMeta.parquetFiles(spark.sparkContext.hadoopConfiguration, path).head
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new Path(file), spark.sparkContext.hadoopConfiguration))
-        try r.getFooter.getBlocks.size() finally r.close()
+        val conf = spark.sparkContext.hadoopConfiguration
+        FooterMeta.footer(conf, FooterMeta.parquetFiles(conf, path).head).meta.getBlocks.size()
       }
       (nc, numRows, rg, nRg, ps, stats, writeMs,
         (thriftUs + schemaUs) / 1e3, thriftUs / 1e3, schemaUs / 1e3,
@@ -498,7 +485,7 @@ object BenchRunners {
     // single-partition generation (r14): one nc-column file instead of
     // 32 three-row ones — the cold fixture build was dominated by
     // per-file column-writer/footer overhead (see WideTableGen.wide)
-    if (!wideFileMatches(spark, path, nc, numRows))
+    if (!wideFileMatches(spark, path, nc, numRows, singleFile = true))
       ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, numPartitions = 1), path,
         ParquetKnobs.WriteConfig(codec = "snappy"))
     val (thriftUs, schemaUs, nColsRead) = footerTimesUs(spark, path)
@@ -530,15 +517,12 @@ object BenchRunners {
     val path = s"$workDir/wide_probe_${nc}cols"
     // identical write to wideFooterProbe's — the two build-if-absent
     // gates share this fixture and must produce the same bytes
-    if (!wideFileMatches(spark, path, nc, numRows))
+    if (!wideFileMatches(spark, path, nc, numRows, singleFile = true))
       ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, numPartitions = 1), path,
         ParquetKnobs.WriteConfig(codec = "snappy"))
     val conf = spark.sparkContext.hadoopConfiguration
-    val file = FooterMeta.parquetFiles(conf, path).head
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-    val nGroups =
-      try reader.getFooter.getBlocks.size
-      finally reader.close()
+    val nGroups = FooterMeta.footer(conf, FooterMeta.parquetFiles(conf, path).head)
+      .meta.getBlocks.size
     val last = s"col_${nc - 1}"
     val r = spark.read.parquet(path)
       .agg(count(lit(1)), fmin("col_0"), fmax("col_0"), fmin(last), fmax(last)).first()
@@ -624,14 +608,11 @@ object BenchRunners {
           ParquetKnobs.WriteConfig(
             rowGroupBytes = ParquetKnobs.rowGroupBytesFor(rg, nc),
             pageBytes = ps, statsLevel = stats))
-      val file = FooterMeta.parquetFiles(spark.sparkContext.hadoopConfiguration, path).head
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-      val (nRg, statsPresent) =
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala
-          (blocks.size, blocks.exists(_.getColumns.asScala.exists { c =>
-            val s = c.getStatistics; s != null && s.hasNonNullValue }))
-        } finally reader.close()
+      val blocks = FooterMeta.footer(conf, FooterMeta.parquetFiles(conf, path).head)
+        .meta.getBlocks.asScala
+      val nRg = blocks.size
+      val statsPresent = blocks.exists(_.getColumns.asScala.exists { c =>
+        val s = c.getStatistics; s != null && s.hasNonNullValue })
       (nc, numRows, rg, ps, stats, nRg, statsPresent, parquetBytes(spark, path))
     }
     rows.toDF("num_columns", "num_rows", "row_group_size", "page_size",

@@ -2,12 +2,16 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
+import java.io.IOException
+import java.nio.{ByteBuffer, ByteOrder}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Parquet footer metadata exposed as queryable Datasets (S4/S5:
   * src/metadata_benchmark.cc:13-79, src/arrow_benchmarks.cc:9-26) — the
@@ -80,34 +84,87 @@ object FooterMeta {
   /** One file's decoded footer: its path, length, metadata, and the
     * nanoseconds spent opening the file and decoding the footer.
     */
-  private final case class Footer(path: String, bytes: Long, meta: ParquetMetadata, decodeNs: Long)
+  final case class Footer(path: String, bytes: Long, meta: ParquetMetadata, decodeNs: Long)
+
+  /** The engine's one way to open a Parquet file. Read options come
+    * from `conf` (the one-argument `ParquetFileReader.open` loads a
+    * default Hadoop conf on every call, which costs more than decoding a
+    * narrow footer and never sees the session's `parquet.*` or
+    * filesystem settings). A footer that cannot be decoded fails with
+    * the file's path in the message. The reader is always closed.
+    */
+  def withReader[A](conf: Configuration, file: String)(f: ParquetFileReader => A): A =
+    read(conf, HadoopInputFile.fromPath(new Path(file), conf))(f)
+
+  /** Decode `file`'s footer; `decodeNs` times the open + footer decode. */
+  def footer(conf: Configuration, file: String): Footer = {
+    val t0 = System.nanoTime()
+    val in = HadoopInputFile.fromPath(new Path(file), conf)
+    read(conf, in)(r => Footer(file, in.getLength, r.getFooter, System.nanoTime() - t0))
+  }
+
+  private def read[A](conf: Configuration, in: HadoopInputFile)(f: ParquetFileReader => A): A = {
+    val reader =
+      try ParquetFileReader.open(in, HadoopReadOptions.builder(conf, in.getPath).build())
+      catch {
+        case NonFatal(e) =>
+          throw new IOException(s"cannot read the Parquet footer of ${in.getPath}: ${e.getMessage}", e)
+      }
+    try f(reader) finally reader.close()
+  }
+
+  /** Length in bytes of `file`'s Thrift footer, read from the 8-byte
+    * trailer `[footer][4-byte little-endian length]["PAR1"]`.
+    */
+  def footerLength(conf: Configuration, file: String): Long = {
+    val p = new Path(file)
+    val fs = p.getFileSystem(conf)
+    val in = fs.open(p)
+    try {
+      in.seek(fs.getFileStatus(p).getLen - 8)
+      val b = new Array[Byte](4)
+      in.readFully(b)
+      Integer.toUnsignedLong(ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt)
+    } finally in.close()
+  }
+
+  /** A Hadoop conf that executor closures can capture: on the driver it
+    * is the conf itself; shipped, it travels as plain entries and is
+    * rebuilt on first use. Spark's `SerializableConfiguration` would also
+    * gzip each entry's source list: for a 1,101-entry session conf it
+    * took 9.7 ms to serialize and 15.6 ms to read back per task, against
+    * 2.1 ms and 3.7 ms for the entries (4-vCPU host).
+    */
+  final class ShippedConf(@transient private val local: Configuration) extends Serializable {
+    private val entries = local.asScala.map(e => (e.getKey, e.getValue)).toArray
+    @transient lazy val value: Configuration = Option(local).getOrElse {
+      val c = new Configuration(false)
+      entries.foreach { case (k, v) => c.set(k, v) }
+      c
+    }
+  }
+
+  /** The session's Hadoop conf (context conf plus runtime `spark.conf`
+    * entries) for executor closures. A fresh `Configuration()` on an
+    * executor would drop s3a/hdfs credentials and endpoints.
+    */
+  def sessionConf(spark: SparkSession): ShippedConf =
+    new ShippedConf(spark.sessionState.newHadoopConf())
 
   /** The distributed fan-out every footer scan here shares: expand
-    * `paths` to parquet files and, in each partition, open one reader
-    * per file, decode its footer, close the reader and hand the footer
-    * to `rows`. The session conf is serialized to the executors — a
-    * fresh Configuration() would drop s3a/hdfs credentials on a real
-    * deployment (SessionConf scaladoc).
+    * `paths` to parquet files and, in each partition, decode each file's
+    * footer and hand it to `rows`, with the session conf shipped to the
+    * executors ([[sessionConf]]).
     */
   private def footerScan[T: Encoder](spark: SparkSession, paths: Seq[String])(
       rows: Footer => Iterable[T]): Dataset[T] = {
-    val files = paths.flatMap(parquetFiles(spark.sparkContext.hadoopConfiguration, _))
-    val confEntries = SessionConf.entries(spark)
+    val conf = sessionConf(spark)
+    val files = paths.flatMap(parquetFiles(conf.value, _))
     spark.createDataset(files)(Encoders.STRING).mapPartitions { iter =>
-      val conf = SessionConf.build(confEntries)
-      iter.flatMap { f =>
-        val t0 = System.nanoTime()
-        val in = HadoopInputFile.fromPath(new Path(f), conf)
-        val reader = ParquetFileReader.open(in)
-        val footer = try {
-          val meta = reader.getFooter
-          Footer(f, in.getLength, meta, System.nanoTime() - t0)
-        } finally reader.close()
-        // a List, not the scans' ArrayBuffers: with ArrayBuffer rows every
-        // perfbench wide_read operation, not only these scans, measured
-        // about 5 % slower
-        rows(footer).toList
-      }
+      // a List, not the scans' ArrayBuffers: with ArrayBuffer rows every
+      // perfbench wide_read operation, not only these scans, measured
+      // about 5 % slower
+      iter.flatMap(f => rows(footer(conf.value, f)).toList)
     }
   }
 
@@ -132,29 +189,33 @@ object FooterMeta {
     }
   }
 
+  /** One file's chunk-stat rows, one per (row group, column chunk): the
+    * rows of both [[chunkStats]] and the `graft-footer` connector.
+    */
+  def chunkRows(path: String, meta: ParquetMetadata): Iterable[ChunkStatRow] =
+    meta.getBlocks.asScala.zipWithIndex.flatMap { case (block, rg) =>
+      block.getColumns.asScala.map { chunk =>
+        val stats = chunk.getStatistics
+        ChunkStatRow(
+          path = path,
+          row_group = rg,
+          column = chunk.getPath.toDotString,
+          codec = chunk.getCodec.toString,
+          compressed_bytes = chunk.getTotalSize,
+          uncompressed_bytes = chunk.getTotalUncompressedSize,
+          num_values = chunk.getValueCount,
+          has_min_max = stats != null && stats.hasNonNullValue,
+          null_count = if (stats == null) -1L else stats.getNumNulls,
+          encodings = chunk.getEncodings.asScala.map(_.toString).toSeq.sorted.mkString("|"),
+          dict_encoded = chunk.getEncodings.asScala.exists(e =>
+            e.toString.contains("DICTIONARY")))
+      }
+    }
+
   /** S5 — column-chunk statistics scan, one row per (row group, chunk). */
   def chunkStats(spark: SparkSession, paths: Seq[String]): Dataset[ChunkStatRow] = {
     import spark.implicits._
-    footerScan(spark, paths) { ft =>
-      ft.meta.getBlocks.asScala.zipWithIndex.flatMap { case (block, rg) =>
-        block.getColumns.asScala.map { chunk =>
-          val stats = chunk.getStatistics
-          ChunkStatRow(
-            path = ft.path,
-            row_group = rg,
-            column = chunk.getPath.toDotString,
-            codec = chunk.getCodec.toString,
-            compressed_bytes = chunk.getTotalSize,
-            uncompressed_bytes = chunk.getTotalUncompressedSize,
-            num_values = chunk.getValueCount,
-            has_min_max = stats != null && stats.hasNonNullValue,
-            null_count = if (stats == null) -1L else stats.getNumNulls,
-            encodings = chunk.getEncodings.asScala.map(_.toString).toSeq.sorted.mkString("|"),
-            dict_encoded = chunk.getEncodings.asScala.exists(e =>
-              e.toString.contains("DICTIONARY")))
-        }
-      }
-    }
+    footerScan(spark, paths)(ft => chunkRows(ft.path, ft.meta))
   }
 
   /** One row per row group with the typed min/max of one INT64 column —

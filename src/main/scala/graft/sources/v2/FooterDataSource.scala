@@ -1,12 +1,9 @@
 package graft.sources.v2
 
 import graft.sources.FooterMeta
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
+import graft.sources.FooterMeta.{ChunkStatRow, ShippedConf}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -15,8 +12,6 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-
-import scala.jdk.CollectionConverters._
 
 /** DataSource V2 connector exposing parquet FOOTER metadata as a
   * first-class Spark table: `spark.read.format("graft-footer").load(p)`
@@ -47,19 +42,8 @@ class FooterDataSource extends TableProvider with DataSourceRegister {
 }
 
 object FooterDataSource {
-  /** One row per column chunk — mirrors [[FooterMeta.ChunkStatRow]]. */
-  val schema: StructType = StructType(Seq(
-    StructField("path", StringType),
-    StructField("row_group", IntegerType),
-    StructField("column", StringType),
-    StructField("codec", StringType),
-    StructField("compressed_bytes", LongType),
-    StructField("uncompressed_bytes", LongType),
-    StructField("num_values", LongType),
-    StructField("has_min_max", BooleanType),
-    StructField("null_count", LongType),
-    StructField("encodings", StringType),
-    StructField("dict_encoded", BooleanType)))
+  /** One row per column chunk: the fields of [[FooterMeta.ChunkStatRow]]. */
+  val schema: StructType = Encoders.product[ChunkStatRow].schema
 }
 
 class FooterTable(path: String) extends Table with SupportsRead {
@@ -79,20 +63,15 @@ class FooterScanBuilder(path: String)
     required = requiredSchema
   override def build(): Scan = {
     // capture the SESSION Hadoop conf at scan build (defaultFS, s3a
-    // credentials, any spark.hadoop.* runtime setting) — a bare `new
-    // Configuration()` works on local FS but silently drops the
-    // configured filesystem on exactly the lake deployments this
-    // connector targets
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    new FooterScan(path, required, conf)
+    // credentials, any spark.hadoop.* runtime setting)
+    new FooterScan(path, required, FooterMeta.sessionConf(SparkSession.active))
   }
 }
 
 final case class FooterFilePartition(file: String) extends InputPartition
 
 class FooterScan(path: String, required: StructType,
-    private[graft] val conf: SerializableConfiguration) extends Scan with Batch {
+    private[graft] val conf: ShippedConf) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String = s"graft-footer $path ${required.fieldNames.mkString(",")}"
@@ -104,7 +83,7 @@ class FooterScan(path: String, required: StructType,
     new FooterReaderFactory(required, conf)
 }
 
-class FooterReaderFactory(required: StructType, conf: SerializableConfiguration)
+class FooterReaderFactory(required: StructType, conf: ShippedConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new FooterPartitionReader(
@@ -112,50 +91,30 @@ class FooterReaderFactory(required: StructType, conf: SerializableConfiguration)
 }
 
 /** Executor-side reader: opens ONE footer, emits its chunk rows
-  * projected to the required (pruned) schema. The Hadoop conf arrives
-  * serialized from the driver's session — never rebuilt from
-  * defaults on the executor.
+  * ([[FooterMeta.chunkRows]]) projected to the required (pruned) schema.
+  * The Hadoop conf arrives serialized from the driver's session — never
+  * rebuilt from defaults on the executor.
   */
 class FooterPartitionReader(file: String, required: StructType,
-    conf: SerializableConfiguration) extends PartitionReader[InternalRow] {
+    conf: ShippedConf) extends PartitionReader[InternalRow] {
 
-  private lazy val rows: Iterator[Map[String, Any]] = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), conf.value))
-    try {
-      val footer = reader.getFooter
-      footer.getBlocks.asScala.zipWithIndex.flatMap { case (block, rg) =>
-        block.getColumns.asScala.map { chunk =>
-          val stats = chunk.getStatistics
-          Map[String, Any](
-            "path" -> file,
-            "row_group" -> rg,
-            "column" -> chunk.getPath.toDotString,
-            "codec" -> chunk.getCodec.toString,
-            "compressed_bytes" -> chunk.getTotalSize,
-            "uncompressed_bytes" -> chunk.getTotalUncompressedSize,
-            "num_values" -> chunk.getValueCount,
-            "has_min_max" -> (stats != null && stats.hasNonNullValue),
-            "null_count" -> (if (stats == null) -1L else stats.getNumNulls),
-            "encodings" -> chunk.getEncodings.asScala.map(_.toString).toSeq.sorted.mkString("|"),
-            "dict_encoded" -> chunk.getEncodings.asScala.exists(_.toString.contains("DICTIONARY")))
-        }
-      }.toList.iterator
-    } finally reader.close()
-  }
+  private val fields = required.fieldNames.map(FooterDataSource.schema.fieldIndex)
 
-  private var current: Map[String, Any] = _
+  private lazy val rows: Iterator[ChunkStatRow] =
+    FooterMeta.chunkRows(file, FooterMeta.footer(conf.value, file).meta).iterator
+
+  private var current: ChunkStatRow = _
 
   override def next(): Boolean =
     if (rows.hasNext) { current = rows.next(); true } else false
 
   override def get(): InternalRow =
-    new GenericInternalRow(required.fields.map { f =>
-      current(f.name) match {
+    new GenericInternalRow(fields.map { i =>
+      current.productElement(i) match {
         case s: String => UTF8String.fromString(s)
-        case other => other.asInstanceOf[AnyRef]
+        case other => other
       }
-    }.asInstanceOf[Array[Any]])
+    })
 
   override def close(): Unit = ()
 }

@@ -11,10 +11,12 @@ import scala.jdk.CollectionConverters._
   * code that passes on local FS breaks on the remote object stores a
   * real deployment reads. The pattern was fixed one flagged site at a
   * time across rounds 10–11 (lakeVacuum, m7PageIndex) and kept
-  * reappearing; this spec makes the whole class unlandable:
-  * [[graft.sources.SessionConf]] is the one sanctioned constructor
-  * (`entries` on the driver, `build` inside the closure), and
-  * driver-side code must use `spark.sparkContext.hadoopConfiguration`.
+  * reappearing; this spec makes the whole class unlandable: executor
+  * closures capture [[graft.sources.FooterMeta.sessionConf]] on the
+  * driver, and driver-side code uses `spark.sparkContext.hadoopConfiguration`.
+  * The same defect hides inside the one-argument
+  * `ParquetFileReader.open`, which builds a default conf per call, so
+  * Parquet files are opened only through `FooterMeta`.
   */
 class SessionConfLintSpec extends AnyFunSuite {
 
@@ -26,14 +28,15 @@ class SessionConfLintSpec extends AnyFunSuite {
       .filter(p => p.toString.endsWith(".scala"))
       .toSeq
 
-  test("src/main has no zero-arg new Configuration() outside SessionConf") {
+  private def mainRoot: Path = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"expected to run from repo root, cwd=${Paths.get("").toAbsolutePath}")
+    root
+  }
+
+  test("src/main has no zero-arg new Configuration()") {
     val hits = for {
-      f <- scalaFiles(root)
-      // SessionConf.scala names the banned pattern in its scaladoc; it
-      // constructs only Configuration(false)
-      if f.getFileName.toString != "SessionConf.scala"
+      f <- scalaFiles(mainRoot)
       (line, idx) <- Files.readAllLines(f).asScala.zipWithIndex
       if banned.findFirstIn(line).isDefined
       // comment lines that merely describe the anti-pattern are fine
@@ -41,28 +44,50 @@ class SessionConfLintSpec extends AnyFunSuite {
     } yield s"$f:${idx + 1}: ${line.trim}"
     assert(hits.isEmpty,
       "zero-arg new Configuration() drops session s3a/hdfs credentials — " +
-        "use SessionConf.entries/build (executor closures) or " +
+        "capture FooterMeta.sessionConf(spark) on the driver (executor closures) or use " +
         "spark.sparkContext.hadoopConfiguration (driver):\n  " +
         hits.mkString("\n  "))
   }
 
-  test("SessionConf.build reconstructs session entries including overrides") {
+  test("src/main opens Parquet files only through FooterMeta") {
+    val opener = raw"""ParquetFileReader\.(open\(|readFooter)|new\s+ParquetFileReader\s*\(""".r
+    val hits = for {
+      f <- scalaFiles(mainRoot)
+      if f.getFileName.toString != "FooterMeta.scala"
+      (line, idx) <- Files.readAllLines(f).asScala.zipWithIndex
+      if opener.findFirstIn(line).isDefined
+    } yield s"$f:${idx + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      "open Parquet files with FooterMeta.footer or FooterMeta.withReader, which build " +
+        "read options from the given conf (the one-argument ParquetFileReader.open " +
+        "loads a default Hadoop conf on every call):\n  " + hits.mkString("\n  "))
+  }
+
+  test("FooterMeta.sessionConf ships context and runtime entries") {
+    import java.io._
     val spark = TestSpark.spark
     spark.sparkContext.hadoopConfiguration.set("graft.lint.probe", "v-17")
+    spark.conf.set("graft.lint.runtime", "r-5")
     try {
-      val entries = graft.sources.SessionConf.entries(spark)
-      val rebuilt = graft.sources.SessionConf.build(entries)
-      assert(rebuilt.get("graft.lint.probe") === "v-17")
-      // defaults came through too (loadDefaults=true conf iterates them)
-      assert(rebuilt.get("fs.defaultFS") != null || entries.nonEmpty)
-    } finally spark.sparkContext.hadoopConfiguration.unset("graft.lint.probe")
+      val bytes = new ByteArrayOutputStream()
+      val out = new ObjectOutputStream(bytes)
+      out.writeObject(graft.sources.FooterMeta.sessionConf(spark))
+      out.close()
+      val shipped = new ObjectInputStream(new ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[graft.sources.FooterMeta.ShippedConf].value
+      assert(shipped.get("graft.lint.probe") === "v-17")
+      assert(shipped.get("graft.lint.runtime") === "r-5")
+    } finally {
+      spark.sparkContext.hadoopConfiguration.unset("graft.lint.probe")
+      spark.conf.unset("graft.lint.runtime")
+    }
   }
 
   test("footer scans work through a rebuilt session conf (S4/S5 executor path)") {
     val spark = TestSpark.spark
     // marker entry visible on the session conf; fileMeta's executor
-    // closure must carry it (it rebuilds from SessionConf.entries) —
-    // and the scan must still decode real footers through that conf
+    // closure carries it (FooterMeta.sessionConf) — and the scan must
+    // still decode real footers through that conf
     spark.sparkContext.hadoopConfiguration.set("graft.lint.footer", "on")
     try {
       val rows = graft.sources.FooterMeta

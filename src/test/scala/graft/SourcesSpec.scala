@@ -97,6 +97,27 @@ class SourcesSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.probe")
   }
 
+  test("a corrupt or truncated footer fails naming the file") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = Paths.get(s"$work/corrupt")
+    Files.createDirectories(dir)
+    val garbage = dir.resolve("garbage_footer.parquet")
+    Files.copy(Paths.get(s"$sf/region.parquet"), garbage, StandardCopyOption.REPLACE_EXISTING)
+    // overwrite the first half of the Thrift footer: [footer][4B len][PAR1]
+    val bytes = Files.readAllBytes(garbage)
+    val footerLen = FooterMeta.footerLength(conf, garbage.toString).toInt
+    val start = bytes.length - 8 - footerLen
+    java.util.Arrays.fill(bytes, start, start + footerLen / 2, 0xff.toByte)
+    Files.write(garbage, bytes)
+    val short = dir.resolve("six_bytes.parquet")
+    Files.write(short, "PAR1PA".getBytes("US-ASCII"))
+    for (f <- Seq(garbage, short)) {
+      val e = intercept[java.io.IOException](FooterMeta.footer(conf, f.toString))
+      assert(e.getMessage.contains(f.getFileName.toString), e.getMessage)
+    }
+  }
+
   test("StatsLevel NONE suppresses chunk min/max entirely") {
     val path = s"$work/statsoff"
     ParquetKnobs.write(WideTableGen.wide(spark, 5, 1000L), path,

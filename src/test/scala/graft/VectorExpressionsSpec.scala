@@ -123,4 +123,16 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(rows.length === 3)
     assert(rows.forall(_.getSeq[Int](0).length === 2))
   }
+
+  test("ivf_pq_encode rejects a vector shorter than its codebooks") {
+    import graft.functions.VectorExpressions
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    // 2 subspaces x 3 dims need 6 elements; the vector has 5
+    val books = Array.fill(2)(Array(Array(0.0, 0.0, 0.0), Array(1.0, 1.0, 1.0)))
+    val e = intercept[IllegalArgumentException](VectorExpressions.ivfPqEncode(
+      new GenericArrayData(Array[Any](1.0, 2.0, 3.0, 4.0, 5.0)),
+      Array(Array.fill(6)(0.0)), Array(0.0), books, books.map(_.map(_.map(x => x * x).sum)),
+      subDim = 3, residual = false, withDist = false))
+    assert(e.getMessage.contains("5") && e.getMessage.contains("6"), e.getMessage)
+  }
 }
