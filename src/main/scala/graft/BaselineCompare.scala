@@ -58,7 +58,7 @@ object BaselineCompare {
     val workDir = s"${graft.WorkDirs.rootActive}/baseline"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus)
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = FooterMeta.sessionConf(spark).value
     val widths = Seq(10, 100, 1000, 2000, 3000)
     val numRows = 10000L
     val reps = 21
@@ -80,7 +80,7 @@ object BaselineCompare {
         .option("parquet.column.statistics.enabled", "false")
         .option("parquet.enable.dictionary", "false")
         .parquet(path)
-      val file = FooterMeta.parquetFiles(spark.sparkContext.hadoopConfiguration, path).head
+      val file = FooterMeta.parquetFiles(conf, path).head
       nc -> stripKeyValueMetadata(conf, file)
     }.toMap
 

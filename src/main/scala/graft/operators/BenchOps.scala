@@ -342,7 +342,7 @@ object BenchOps {
       ("sl0_none", false, PageIdxPageRows),
       ("sl1_chunk", true, 1 << 30),
       ("sl2_page", true, PageIdxPageRows))
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = FooterMeta.sessionConf(spark).value
     val rows = configs.map { case (name, stats, pageRows) =>
       val path = s"$workRoot/pageidx/$name"
       base.coalesce(1).write.mode("overwrite")
@@ -804,7 +804,7 @@ object BenchOps {
   private[graft] def bloomFlags(spark: SparkSession, path: String): (Boolean, Boolean) = {
     import org.apache.hadoop.fs.Path
     import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = FooterMeta.sessionConf(spark).value
     val fs = new Path(path).getFileSystem(conf)
     val part = fs.listStatus(new Path(path)).map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).minBy(_.getName)
@@ -950,7 +950,7 @@ object BenchOps {
     val sidecarPath = s"$workRoot/sidecar/chunk_stats"
     val stats = FooterMeta.chunkStats(spark, paths)
     stats.toDF().write.mode("overwrite").parquet(sidecarPath)
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = FooterMeta.sessionConf(spark).value
     def len(p: String): Long = {
       val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(conf)

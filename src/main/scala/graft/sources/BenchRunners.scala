@@ -35,7 +35,7 @@ object BenchRunners {
     * multi-× scheduler outliers that would masquerade as scaling effects.
     */
   private def footerTimesUs(spark: SparkSession, p: String): (Double, Double, Long) = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = FooterMeta.sessionConf(spark).value
     val file = FooterMeta.parquetFiles(conf, p).head
     def once(): (Double, Double, Long) = {
       val ft = FooterMeta.footer(conf, file)
@@ -63,7 +63,7 @@ object BenchRunners {
     */
   private def wideFileMatches(spark: SparkSession, path: String, nc: Int, numRows: Long,
       singleFile: Boolean = false): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = FooterMeta.sessionConf(spark).value
     val p = new Path(path)
     try {
       if (!p.getFileSystem(conf).exists(p)) return false
@@ -218,7 +218,7 @@ object BenchRunners {
       numRows: Long,
       workDir: String): DataFrame = {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = FooterMeta.sessionConf(spark).value
     val rows = numColsList.map { nc =>
       val path = s"$workDir/meta_bench_${nc}cols" // shares files with chunksAndPages
       val file = FooterMeta.parquetFiles(conf, path).head
@@ -300,7 +300,7 @@ object BenchRunners {
       val sizeMb = dirBytes(spark, path) / 1024.0 / 1024.0
       // actual row-group count from the footer — evidence the axis varied
       val nRg = {
-        val conf = spark.sparkContext.hadoopConfiguration
+        val conf = FooterMeta.sessionConf(spark).value
         FooterMeta.footer(conf, FooterMeta.parquetFiles(conf, path).head).meta.getBlocks.size()
       }
       (nc, numRows, rg, nRg, ps, stats, writeMs,
@@ -520,7 +520,7 @@ object BenchRunners {
     if (!wideFileMatches(spark, path, nc, numRows, singleFile = true))
       ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, numPartitions = 1), path,
         ParquetKnobs.WriteConfig(codec = "snappy"))
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = FooterMeta.sessionConf(spark).value
     val nGroups = FooterMeta.footer(conf, FooterMeta.parquetFiles(conf, path).head)
       .meta.getBlocks.size
     val last = s"col_${nc - 1}"
@@ -594,7 +594,7 @@ object BenchRunners {
       pageSizes: Seq[Int],
       workDir: String): DataFrame = {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = FooterMeta.sessionConf(spark).value
     val rows = for {
       nc <- numColsList
       rg <- rowGroupSizes

@@ -1,29 +1,29 @@
 package graft.sources
 
+import graft.sources.v2.{WideSpec, WideTableSource}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Wide random-float table generator — the reference's table-valued
   * source (G1: src/data_generator.cc:6-55, src/test_data_generator.cc:8-45;
   * columns `col_<i>`, float32, uniform random).
   *
-  * Spark-first: `spark.range` is an embarrassingly parallel source with
-  * no input scan; each column is an independent seeded `rand`, so
-  * generation distributes across the cluster with zero shuffle and
-  * deterministic per-(seed, row) values regardless of partition count is
-  * NOT guaranteed by rand() — rand is deterministic per (seed,
-  * partition, offset). For benchmark workloads that is exactly the
-  * reference's contract (src/data_generator.cc:16-21 uses an unseeded
-  * mt19937 — ours is more reproducible, not less).
+  * Spark-first: the table is one DataSource V2 leaf
+  * ([[graft.sources.v2.WideTableSource]]) with no input scan, so
+  * generation distributes across the cluster with zero shuffle, and its
+  * plan stays one node with N attributes however wide the table is.
   *
-  * Codegen guard (SURVEY §7.4): very wide selects can exceed the JVM
-  * 64KB method limit in whole-stage codegen; Spark falls back
-  * automatically above spark.sql.codegen.maxFields (default 100), so
-  * 10,000-column generation degrades gracefully rather than failing.
+  * Determinism: a value depends on (seed, partition, column, row offset
+  * within the partition) only. The same (seed, numRows, numPartitions)
+  * gives the same table, and reading a subset of the columns gives those
+  * columns of the full read. The reference seeds nothing
+  * (src/data_generator.cc:16-21 uses an unseeded mt19937); ours is more
+  * reproducible, not less.
   */
 object WideTableGen {
 
-  /** N cols × M rows of uniform floats in [lo, hi), columns col_0..col_{n-1}.
+  /** N cols × M rows of uniform floats in [lo, hi), columns col_0..col_{n-1},
+    * non-nullable (Parquet writes them REQUIRED).
     *
     * `numPartitions` ≤ 0 keeps the session default (the historical
     * behavior — at local[32] a 100-row frame writes as 32 tiny files).
@@ -31,10 +31,9 @@ object WideTableGen {
     * each output FILE pays 10k column-writer initializations and a 10k-
     * entry footer, so 32 three-row files cost ~32× the writer/footer
     * overhead of one file for the same data — a cold 10k-col fixture
-    * build measured ~110 s multi-file. Values stay deterministic (rand
-    * is seeded per (seed, output partition)); content differs from the
-    * multi-file layout, which is fine because every oracle re-derives
-    * its expectations from the produced file itself.
+    * build measured ~110 s multi-file. Content differs with the
+    * partition count, which is fine because every oracle re-derives its
+    * expectations from the produced file itself.
     */
   def wide(
       spark: SparkSession,
@@ -44,10 +43,12 @@ object WideTableGen {
       lo: Double = -1000.0,
       hi: Double = 1000.0,
       numPartitions: Int = 0): DataFrame = {
-    val base = if (numPartitions > 0) spark.range(0L, numRows, 1L, numPartitions)
-               else spark.range(numRows)
-    base.select(
-      (0 until numCols).map(i =>
-        (rand(seed + i) * (hi - lo) + lo).cast("float").as(s"col_$i")): _*)
+    // as many partitions as `spark.range(numRows)` would have
+    val parts = if (numPartitions > 0) numPartitions
+                else spark.sessionState.conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+                  .getOrElse(spark.sparkContext.defaultParallelism)
+    spark.read.format(classOf[WideTableSource].getName)
+      .options(WideSpec(numCols, numRows, seed, lo, hi, parts).options)
+      .load()
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
+import graft.sources.FooterMeta
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.io.IOException
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -13,10 +15,14 @@ import scala.jdk.CollectionConverters._
   * time across rounds 10–11 (lakeVacuum, m7PageIndex) and kept
   * reappearing; this spec makes the whole class unlandable: executor
   * closures capture [[graft.sources.FooterMeta.sessionConf]] on the
-  * driver, and driver-side code uses `spark.sparkContext.hadoopConfiguration`.
-  * The same defect hides inside the one-argument
-  * `ParquetFileReader.open`, which builds a default conf per call, so
-  * Parquet files are opened only through `FooterMeta`.
+  * driver, and other driver-side code uses
+  * `spark.sparkContext.hadoopConfiguration`. The same defect hides
+  * inside the one-argument `ParquetFileReader.open`, which builds a
+  * default conf per call, so Parquet files are opened only through
+  * `FooterMeta`. The driver-side footer entries take the session conf
+  * too: the context conf lacks runtime `spark.conf.set` entries, so a
+  * `parquet.*` or filesystem setting made at runtime would reach the
+  * scans but not the footer reads beside them.
   */
 class SessionConfLintSpec extends AnyFunSuite {
 
@@ -61,6 +67,54 @@ class SessionConfLintSpec extends AnyFunSuite {
       "open Parquet files with FooterMeta.footer or FooterMeta.withReader, which build " +
         "read options from the given conf (the one-argument ParquetFileReader.open " +
         "loads a default Hadoop conf on every call):\n  " + hits.mkString("\n  "))
+  }
+
+  test("driver-side FooterMeta entries take the session conf, not hadoopConfiguration") {
+    // the conf argument of an entry call, and for a plain name the
+    // nearest binding of that name above the call (a val or a parameter)
+    val entry = raw"""FooterMeta\.(footer|withReader|footerLength|parquetFiles)\(\s*([^,]+),""".r
+    def binding(lines: IndexedSeq[String], at: Int, name: String): Option[String] =
+      if (!name.matches("[A-Za-z_][A-Za-z0-9_]*")) None
+      else {
+        val bound = raw"""\b(val|var)\s+$name\b|\b$name\s*:""".r
+        (at to 0 by -1).map(lines).find(bound.findFirstIn(_).isDefined)
+      }
+    val hits = for {
+      f <- scalaFiles(mainRoot)
+      lines = Files.readAllLines(f).asScala.toIndexedSeq
+      (line, idx) <- lines.zipWithIndex
+      if !line.trim.startsWith("//") && !line.trim.startsWith("*")
+      m <- entry.findAllMatchIn(line)
+      arg = m.group(2).trim
+      if (arg +: binding(lines, idx, arg).toSeq).exists(_.contains("hadoopConfiguration"))
+    } yield s"$f:${idx + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      "pass FooterMeta.sessionConf(spark).value to FooterMeta.footer/withReader/" +
+        "footerLength/parquetFiles; the context hadoopConfiguration lacks runtime " +
+        "spark.conf settings:\n  " + hits.mkString("\n  "))
+  }
+
+  test("a runtime parquet.* setting reaches the driver-side footer read options") {
+    // a decryption factory that does not exist: the read options are
+    // built from the conf, so only a conf that carries the runtime
+    // setting makes the footer read fail
+    val file = s"${TestSpark.sf}/region.parquet"
+    val spark = TestSpark.spark
+    val missing = "graft.lint.NoSuchDecryptionFactory"
+    def mentionsMissing(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(missing))
+    spark.conf.set("parquet.crypto.factory.class", missing)
+    try {
+      // the context conf never sees the runtime entry
+      assert(FooterMeta.footer(spark.sparkContext.hadoopConfiguration, file).meta != null)
+      val direct = intercept[IOException](FooterMeta.footer(FooterMeta.sessionConf(spark).value, file))
+      assert(mentionsMissing(direct), direct.toString)
+      // a driver-side reader in the engine
+      val viaEngine = intercept[IOException](graft.operators.BenchOps.bloomFlags(spark, file))
+      assert(mentionsMissing(viaEngine), viaEngine.toString)
+    } finally spark.conf.unset("parquet.crypto.factory.class")
+    assert(FooterMeta.footer(FooterMeta.sessionConf(spark).value, file).meta != null)
   }
 
   test("FooterMeta.sessionConf ships context and runtime entries") {

@@ -19,6 +19,48 @@ class SourcesSpec extends AnyFunSuite {
     assert(mm.getFloat(0) >= -1000f && mm.getFloat(1) <= 1000f)
   }
 
+  test("wide generator: the same (seed, rows, numPartitions) gives the same frame") {
+    def gen(seed: Long) = WideTableGen.wide(spark, 6, 500L, seed, numPartitions = 3)
+    val (a, b) = (gen(11), gen(11))
+    assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0)
+    assert(gen(12).exceptAll(a).count() === 500, "another seed must give other values")
+  }
+
+  test("wide generator: a pruned read returns those columns of the full read") {
+    val full = WideTableGen.wide(spark, 20, 300L, seed = 5, numPartitions = 2)
+    val pruned = full.select("col_3", "col_17")
+    val scans = pruned.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+    assert(scans.map(_.scan.readSchema().fieldNames.toSeq) === Seq(Seq("col_3", "col_17")),
+      "required-column pushdown must reach the source")
+    val fromFull = full.collect().map(r => (r.getFloat(3), r.getFloat(17))).toSeq
+    assert(pruned.collect().map(r => (r.getFloat(0), r.getFloat(1))).toSeq === fromFull)
+  }
+
+  test("wide generator: numPartitions = k writes k files; 0 keeps the session default") {
+    val path = s"$work/wide_k_files"
+    ParquetKnobs.write(WideTableGen.wide(spark, 4, 900L, numPartitions = 3), path,
+      ParquetKnobs.WriteConfig())
+    val conf = FooterMeta.sessionConf(spark).value
+    val files = FooterMeta.parquetFiles(conf, path)
+    assert(files.size === 3)
+    assert(files.map(f => FooterMeta.footer(conf, f).meta.getBlocks.get(0).getRowCount).sum === 900)
+    assert(WideTableGen.wide(spark, 4, 900L).rdd.getNumPartitions ===
+      spark.sparkContext.defaultParallelism)
+  }
+
+  test("wide generator: non-nullable floats from one leaf with N attributes") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Project}
+    import org.apache.spark.sql.types.FloatType
+    val df = WideTableGen.wide(spark, 300, 10L)
+    assert(df.schema.fields.forall(f => f.dataType == FloatType && !f.nullable))
+    val plan = df.queryExecution.analyzed
+    assert(plan.isInstanceOf[LeafNode], plan.treeString)
+    assert(plan.output.size === 300)
+    assert(plan.collectFirst { case p: Project => p }.isEmpty)
+  }
+
   test("writer knobs round-trip: written file reads back with same content") {
     val df = WideTableGen.wide(spark, 5, 2000L, seed = 3)
     val path = s"$work/roundtrip"
@@ -30,7 +72,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
     assert(back.count() === 2000)
-    // content equality via symmetric difference (rand is deterministic per seed)
+    // content equality via symmetric difference (the generator is deterministic per seed)
     assert(back.exceptAll(df).count() === 0 && df.exceptAll(back).count() === 0)
   }
 

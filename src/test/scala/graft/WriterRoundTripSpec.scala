@@ -27,8 +27,8 @@ class WriterRoundTripSpec extends AnyFunSuite {
     val path = s"${System.getProperty("user.dir")}/target/graft-test/prop_roundtrip"
     val prop = Prop.forAll(gen) {
       case (cols, rows, codec, rgRows, page, dict, stats, seed) =>
-        // rand(seed) is deterministic per (partition, offset), so the
-        // regenerated frame equals what was written
+        // values depend on (seed, partition, column, row offset) only,
+        // so the regenerated frame equals what was written
         val df = WideTableGen.wide(spark, cols, rows.toLong, seed)
         ParquetKnobs.write(df, path, ParquetKnobs.WriteConfig(
           codec = codec,
