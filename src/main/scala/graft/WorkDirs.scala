@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Single conf-backed root for every on-disk artifact the engine
   * stages: write-once bench fixtures, fingerprint-keyed ANN/dedup
   * model parquet, streaming stage/sink/checkpoint dirs, lake-op table
-  * dirs. Before r13 these were 30 hardcoded absolute-checkout-path
+  * dirs. Write-once layers under it go through [[Staged]], which
+  * decides when one is still valid; this object only resolves the
+  * root. Before r13 these were 30 hardcoded absolute-checkout-path
   * literals — engine code that could not run from any other checkout
   * or on a cluster (the same recurring-defect shape as the
   * executor-side `new Configuration()` sweep; [[WorkDirsLintSpec]]

@@ -1192,27 +1192,20 @@ object Analytics {
   }
 
   def j4DppJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/orders.parquet")
-    val out = s"${graft.WorkDirs.rootActive}/dpp/orders_by_status_" +
-      s"${new java.io.File(sfDir).getName}_$fp"
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$out/_SUCCESS")))
+    val out = graft.Staged.dir(spark, s"dpp/orders_by_status_${new java.io.File(sfDir).getName}",
+        Seq(s"$sfDir/orders.parquet")) { out =>
+      import spark.implicits._
       Tables.orders(spark, sfDir)
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    // the dimension must be a real datasource: a filtered 3-row
-    // LocalRelation is constant-folded by ConvertToLocalRelation,
-    // leaving no Filter node for DPP's selectivity heuristic — with a
-    // parquet dim the filter survives and the pruning subquery injects
-    val dimPath = s"$out/_dim_status"
-    if (!fs.exists(new Path(s"$dimPath/_SUCCESS"))) {
-      import spark.implicits._
+      // the dimension must be a real datasource: a filtered 3-row
+      // LocalRelation is constant-folded by ConvertToLocalRelation,
+      // leaving no Filter node for DPP's selectivity heuristic — with a
+      // parquet dim the filter survives and the pruning subquery injects
       Seq(("F", "done"), ("O", "open"), ("P", "pending"))
         .toDF("status", "label")
-        .coalesce(1).write.mode("overwrite").parquet(dimPath)
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/_dim_status")
     }
-    val dim = spark.read.parquet(dimPath)
+    val dim = spark.read.parquet(s"$out/_dim_status")
     spark.read.parquet(out)
       .join(broadcast(dim.filter(col("label") === "done")),
         col("o_orderstatus") === col("status"))

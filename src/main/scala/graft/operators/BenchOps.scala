@@ -122,26 +122,19 @@ object BenchOps {
     * count from `parquet_metadata()`.
     */
   /** Write-once partitioned orders fixture shared by
-    * [[partitionAudit]] and [[fileProvenance]] — keyed on the input
-    * file fingerprint so a testdata regen rebuilds it exactly once.
+    * [[partitionAudit]] and [[fileProvenance]], at the path the oracles
+    * address textually; staged against the input file, so a testdata
+    * regen rebuilds it exactly once.
     */
-  private def ensurePauditFixture(spark: SparkSession, sfDir: String): String = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/orders.parquet")
-    val out = s"$workRoot/paudit$sfDir/orders_by_status"
-    val fs = new Path(out).getFileSystem(conf)
-    if (!fs.exists(new Path(s"$out/_AUDIT_FP_$fp"))) {
-      fs.delete(new Path(out), true)
+  private def ensurePauditFixture(spark: SparkSession, sfDir: String): String =
+    graft.Staged.at(spark, s"$workRoot/paudit$sfDir/orders_by_status",
+        Seq(s"$sfDir/orders.parquet")) { out =>
       val o = graft.Tables.orders(spark, sfDir)
       o.filter(col("o_orderstatus") =!= "P").repartition(2, col("o_orderkey"))
         .write.partitionBy("o_orderstatus").mode("overwrite").parquet(out)
       o.filter(col("o_orderstatus") === "P").repartition(8, col("o_orderkey"))
         .write.partitionBy("o_orderstatus").mode("append").parquet(out)
-      fs.create(new Path(s"$out/_AUDIT_FP_$fp")).close()
     }
-    out
-  }
 
   /** Row-level file provenance via the hidden `_metadata` struct
     * (round-11): which physical file contributed which rows — the
@@ -496,14 +489,11 @@ object BenchOps {
 
   /** The pushdown table re-written in hash-shuffled order with the same
     * 1 MiB row groups — the anti-clustered control for
-    * [[xLayoutSkipping]]. Write-once (_SUCCESS-gated), deterministic.
+    * [[xLayoutSkipping]]. Write-once ([[graft.Staged]]), deterministic.
     */
   private def ensureShuffledFile(
-      spark: SparkSession, numRows: Long, workDir: String): String = {
-    val path = s"$workDir/shuffled_bench_$numRows"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"))) {
+      spark: SparkSession, numRows: Long, workDir: String): String =
+    graft.Staged.at(spark, s"$workDir/shuffled_bench_$numRows", Nil) { path =>
       val df = spark.range(numRows).selectExpr(
         "id AS k", "CAST(id % 1000 AS DOUBLE) AS v")
         .withColumn("h", hash(col("k")))
@@ -513,8 +503,6 @@ object BenchOps {
       ParquetKnobs.write(df, path,
         ParquetKnobs.WriteConfig(rowGroupBytes = 1024 * 1024))
     }
-    path
-  }
 
   /** M4 deterministic twin — the filtered results under both pushdown
     * settings (pushdown must never change results), oracle-checked by
@@ -648,12 +636,10 @@ object BenchOps {
     */
   def k8Compaction(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/orders.parquet")
-    val frag = s"$workRoot/compact/frag_${new java.io.File(sfDir).getName}_$fp"
+    val frag = graft.Staged.dir(spark, s"compact/frag_${new java.io.File(sfDir).getName}",
+        Seq(s"$sfDir/orders.parquet"))(
+      Tables.orders(spark, sfDir).repartition(64).write.mode("overwrite").parquet(_))
     val fs = new Path(frag).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$frag/_SUCCESS")))
-      Tables.orders(spark, sfDir).repartition(64).write.mode("overwrite").parquet(frag)
     val inputBytes = fs.listStatus(new Path(frag))
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val targetFileBytes = 4L << 20 // 4 MiB here; 128 MiB-1 GiB on a lake
@@ -692,12 +678,8 @@ object BenchOps {
     * split-block bloom filter on `k` only (shared by the knob query and
     * the read-side pruning evidence below).
     */
-  private def ensureBloomFile(spark: SparkSession): String = {
-    import org.apache.hadoop.fs.Path
-    val path = s"$workRoot/bloom/bloom_knob_$BloomRows"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    if (!fs.exists(new Path(s"$path/_SUCCESS")))
+  private def ensureBloomFile(spark: SparkSession): String =
+    graft.Staged.dir(spark, s"bloom/bloom_knob_$BloomRows", Nil) { path =>
       spark.range(BloomRows)
         .selectExpr("id * 2 AS k", "cast(id % 1000 as double) AS v")
         .coalesce(1)
@@ -705,8 +687,7 @@ object BenchOps {
         .option("parquet.bloom.filter.enabled#k", "true")
         .option("parquet.bloom.filter.expected.ndv#k", BloomRows.toString)
         .parquet(path)
-    path
-  }
+    }
 
   def k9BloomKnob(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -870,13 +851,9 @@ object BenchOps {
     * source fingerprint ([[graft.sources.LayoutCache]]) so a
     * regenerated lineitem table always forces a fresh sorted copy.
     */
-  def sortedLineitemPath(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/lineitem.parquet")
-    val out = s"$workRoot/sorted/lineitem_${new java.io.File(sfDir).getName}_$fp"
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$out/_SUCCESS")))
+  def sortedLineitemPath(spark: SparkSession, sfDir: String): String =
+    graft.Staged.dir(spark, s"sorted/lineitem_${new java.io.File(sfDir).getName}",
+        Seq(s"$sfDir/lineitem.parquet")) { out =>
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), to_date(col("l_shipdate")).as("l_shipdate"),
           col("l_quantity"), col("l_extendedprice"))
@@ -885,8 +862,7 @@ object BenchOps {
         .write.mode("overwrite")
         .option("parquet.block.size", (1024 * 1024).toString)
         .parquet(out)
-    out
-  }
+    }
 
   /** A7 — sketch aggregates: the bounded-memory versions of
     * count-distinct and percentile that replace the exact forms at

@@ -1525,17 +1525,12 @@ object Curation {
 
   /** Stage the day-partitioned events table and dynamically backfill
     * its earliest day with revised values (value doubled). Returns
-    * (tableDir, revisedDay). Idempotent via a staging sentinel.
+    * (tableDir, revisedDay). Staged once ([[graft.Staged]]).
     */
   private[graft] def backfillDirs(spark: SparkSession, sfDir: String): (String, String) = {
     import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/events.parquet")
-    val dir = s"${graft.WorkDirs.rootActive}/backfill_$fp"
-    val fs = new Path(dir).getFileSystem(conf)
-    val dayFile = new Path(s"$dir/_REVISED_DAY")
-    if (!fs.exists(dayFile)) {
-      fs.delete(new Path(dir), true)
+    val dir = graft.Staged.dir(spark, "backfill", Seq(s"$sfDir/events.parquet")) { dir =>
       val ev = Tables.events(spark, sfDir)
         .withColumn("day", date_format(date_trunc("day", col("ts")), "yyyy-MM-dd"))
       // one output file per day partition: repartition on the
@@ -1544,10 +1539,11 @@ object Curation {
         .write.mode("overwrite").partitionBy("day").parquet(s"$dir/t")
       val revisedDay = ev.agg(min("day")).head().getString(0)
       backfillDay(spark, sfDir, s"$dir/t", revisedDay)
-      val out = fs.create(dayFile)
+      val out = new Path(dir).getFileSystem(conf).create(new Path(s"$dir/revised_day"))
       out.write(revisedDay.getBytes("UTF-8")); out.close()
     }
-    val in = fs.open(dayFile)
+    val dayFile = new Path(s"$dir/revised_day")
+    val in = dayFile.getFileSystem(conf).open(dayFile)
     val revised = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
     in.close()
     (s"$dir/t", revised)
@@ -1817,12 +1813,8 @@ object Curation {
     */
   def wapPublish(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/documents.parquet")
-    val dir = s"${graft.WorkDirs.rootActive}/wap_$fp"
-    val fs = new Path(dir).getFileSystem(conf)
-    if (!fs.exists(new Path(s"$dir/_DONE"))) {
-      fs.delete(new Path(dir), true)
+    val dir = graft.Staged.dir(spark, "wap", Seq(s"$sfDir/documents.parquet")) { dir =>
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val docs = Tables.documents(spark, sfDir).select("doc_id", "text", "n_chars")
       docs.filter(col("doc_id") % 3 =!= 0)
         .write.mode("overwrite").parquet(s"$dir/stage/batch_clean")
@@ -1839,7 +1831,6 @@ object Curation {
         if (viol == 0L)
           fs.rename(new Path(s"$dir/stage/$b"), new Path(s"$dir/published/$b"))
       }
-      fs.create(new Path(s"$dir/_DONE")).close()
     }
     def stat(df: DataFrame, stage: String, published: Int): DataFrame =
       df.agg(
@@ -1975,11 +1966,6 @@ object Curation {
     * query carries a full DuckDB oracle recomputing from scratch.
     */
   def incrAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/events.parquet")
-    val dir = s"${graft.WorkDirs.rootActive}/incr_agg_$fp"
-    val fs = new Path(dir).getFileSystem(conf)
     val ev = Tables.events(spark, sfDir)
       .withColumn("day", date_format(date_trunc("day", col("ts")), "yyyy-MM-dd"))
       .withColumn("v", expr("cast(round(value * 1000000) as bigint)"))
@@ -1989,11 +1975,9 @@ object Curation {
     def partials(slice: DataFrame): DataFrame =
       slice.groupBy("day", "event_type")
         .agg(count(lit(1)).as("cnt"), sum("v").as("vsum"))
-    if (!fs.exists(new Path(s"$dir/_MATERIALIZED"))) {
-      fs.delete(new Path(dir), true)
+    val dir = graft.Staged.dir(spark, "incr_agg", Seq(s"$sfDir/events.parquet")) { dir =>
       partials(ev.crossJoin(broadcast(maxDay)).filter(col("day") < col("max_day")))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/partials")
-      fs.create(new Path(s"$dir/_MATERIALIZED")).close()
     }
     val history = spark.read.parquet(s"$dir/partials")
     val delta = partials(
@@ -2055,17 +2039,11 @@ object Curation {
     stats("v1").unionByName(stats("v2")).orderBy("version")
   }
 
-  /** Stages the two immutable snapshot directories (idempotent via the
-    * `_SNAPSHOTTED` sentinel); shared by the as-of read and the diff.
+  /** Stages the two immutable snapshot directories ([[graft.Staged]]);
+    * shared by the as-of read and the diff.
     */
-  private[graft] def snapshotDir(spark: SparkSession, sfDir: String): String = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/documents.parquet")
-    val dir = s"${graft.WorkDirs.rootActive}/snapshots_$fp"
-    val fs = new Path(dir).getFileSystem(conf)
-    if (!fs.exists(new Path(s"$dir/_SNAPSHOTTED"))) {
-      fs.delete(new Path(dir), true)
+  private[graft] def snapshotDir(spark: SparkSession, sfDir: String): String =
+    graft.Staged.dir(spark, "snapshots", Seq(s"$sfDir/documents.parquet")) { dir =>
       val base = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
       base.write.mode("overwrite").parquet(s"$dir/v1")
       val updates = Tables.documents(spark, sfDir)
@@ -2079,10 +2057,7 @@ object Curation {
         .select(col("doc_id"), coalesce(col("new_text"), col("text")).as("text"))
         .unionByName(inserts)
         .write.mode("overwrite").parquet(s"$dir/v2")
-      fs.create(new Path(s"$dir/_SNAPSHOTTED")).close()
     }
-    dir
-  }
 
   /** Snapshot DIFF — the CDC audit between two immutable table
     * versions: one full-outer join on the key classifies every row as
@@ -2147,28 +2122,23 @@ object Curation {
     * files (k8's job).
     *
     * Determinism: positions come from the immutable v1 snapshot
-    * (_SNAPSHOTTED-gated layout); the result exposes only row-level
+    * ([[snapshotDir]]); the result exposes only row-level
     * aggregates of survivors and deletions, never file paths, so the
     * DuckDB oracle re-derives it from `documents` alone. One scan +
     * one join + one aggregate — no crossJoin, no collect.
     */
   def positionalDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val dir = snapshotDir(spark, sfDir)
-    val dvDir = s"$dir/dv_v1"
     def baseWithPos = spark.read.parquet(s"$dir/v1")
       .select(col("doc_id"), col("text"),
         col("_metadata.file_path").as("f"), col("_metadata.row_index").as("pos"))
-    val fs = new Path(dvDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // gate on the data files, not just _SUCCESS: a sentinel without
-    // data (e.g. after an external cleanup deleted the part files)
-    // must trigger a rebuild, not an unreadable empty-dir scan
-    val dvIntact = fs.exists(new Path(s"$dvDir/_SUCCESS")) &&
-      fs.listStatus(new Path(dvDir)).exists(_.getPath.getName.endsWith(".parquet"))
-    if (!dvIntact)
+    // the sidecar holds v1's absolute file paths, so it is staged
+    // against v1 itself: a rebuilt or moved v1 rebuilds it
+    val dvDir = graft.Staged.at(spark, s"$dir/dv_v1", Seq(s"$dir/v1")) { dvDir =>
       baseWithPos.filter(col("doc_id") % 11 === 0)
         .select(col("f"), col("pos"))
         .write.mode("overwrite").parquet(dvDir)
+    }
     val dv = spark.read.parquet(dvDir).withColumn("del", lit(true))
     baseWithPos.join(dv, Seq("f", "pos"), "left")
       .agg(
@@ -2227,27 +2197,23 @@ object Curation {
       .toDF("read_path", "n_rows", "id_sum", "text_checksum")
   }
 
-  /** Stages the DV + delta layers (idempotent, data-file-gated like
-    * dv_v1) and returns the layered reconstruction as a (doc_id, text)
-    * frame — shared by [[mergeOnRead]] and its row-identity spec.
+  /** Stages the DV + delta layers inside the snapshot store (the DV
+    * against v1, like dv_v1) and returns the layered reconstruction as
+    * a (doc_id, text) frame — shared by [[mergeOnRead]] and its
+    * row-identity spec.
     */
   private[graft] def mergeOnReadFrame(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val dir = snapshotDir(spark, sfDir)
-    val dvDir = s"$dir/dv_mor"
-    val deltaDir = s"$dir/delta_mor"
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def intact(d: String): Boolean =
-      fs.exists(new Path(s"$d/_SUCCESS")) &&
-        fs.listStatus(new Path(d)).exists(_.getPath.getName.endsWith(".parquet"))
     def baseWithPos = spark.read.parquet(s"$dir/v1")
       .select(col("doc_id"), col("text"),
         col("_metadata.file_path").as("f"), col("_metadata.row_index").as("pos"))
-    if (!intact(dvDir))
+    val dvDir = graft.Staged.at(spark, s"$dir/dv_mor", Seq(s"$dir/v1")) { dvDir =>
       baseWithPos.filter(col("doc_id") % 7 === 0)
         .select(col("f"), col("pos"))
         .write.mode("overwrite").parquet(dvDir)
-    if (!intact(deltaDir)) {
+    }
+    val deltaDir = graft.Staged.at(spark, s"$dir/delta_mor",
+        Seq(s"$sfDir/documents.parquet")) { deltaDir =>
       val docs = Tables.documents(spark, sfDir)
       val updates = docs.filter(col("doc_id") % 7 === 0)
         .select(col("doc_id"), concat(col("text"), lit(" [rev2]")).as("text"))
@@ -2280,8 +2246,7 @@ object Curation {
     * two neighbors — all derived from the data, collected as THREE day
     * strings (literal partition predicates must be static to prune at
     * planning time; this is the k×d-codebook-sized collect the ANN
-    * family documents). Layouts are staged once behind a fingerprint
-    * sentinel.
+    * family documents). Layouts are staged once ([[graft.Staged]]).
     */
   def partitionEvolution(spark: SparkSession, sfDir: String): DataFrame = {
     val (gen1Dir, gen2Dir) = partitionEvolutionDirs(spark, sfDir)
@@ -2311,20 +2276,13 @@ object Curation {
       .orderBy("day")
   }
 
-  /** Stages the two event-layout generations (idempotent via the
-    * `_PARTEVO` sentinel): days below the median distinct day as one
-    * flat directory WITHOUT the day column, the rest hive-partitioned
-    * by day.
+  /** Stages the two event-layout generations ([[graft.Staged]]): days
+    * below the median distinct day as one flat directory WITHOUT the
+    * day column, the rest hive-partitioned by day.
     */
   private[graft] def partitionEvolutionDirs(
       spark: SparkSession, sfDir: String): (String, String) = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/events.parquet")
-    val dir = s"${graft.WorkDirs.rootActive}/partevo_$fp"
-    val fs = new Path(dir).getFileSystem(conf)
-    if (!fs.exists(new Path(s"$dir/_PARTEVO"))) {
-      fs.delete(new Path(dir), true)
+    val dir = graft.Staged.dir(spark, "partevo", Seq(s"$sfDir/events.parquet")) { dir =>
       val ev = Tables.events(spark, sfDir)
         .withColumn("day", date_format(date_trunc("day", col("ts")), "yyyy-MM-dd"))
       val ds = ev.select("day").distinct().orderBy("day")
@@ -2335,7 +2293,6 @@ object Curation {
       ev.filter(col("day") >= cut)
         .repartition(4, col("day"), col("user_id"))
         .write.mode("overwrite").partitionBy("day").parquet(s"$dir/gen2")
-      fs.create(new Path(s"$dir/_PARTEVO")).close()
     }
     (s"$dir/gen1", s"$dir/gen2")
   }
@@ -3000,13 +2957,7 @@ object Curation {
     * — schema migration without rewriting petabytes.
     */
   def schemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/documents.parquet")
-    val dir = s"${graft.WorkDirs.rootActive}/schema_evo_$fp"
-    val fs = new Path(dir).getFileSystem(conf)
-    if (!fs.exists(new Path(s"$dir/_STAGED"))) {
-      fs.delete(new Path(dir), true)
+    val dir = graft.Staged.dir(spark, "schema_evo", Seq(s"$sfDir/documents.parquet")) { dir =>
       val docs = Tables.documents(spark, sfDir)
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -3014,7 +2965,6 @@ object Curation {
       docs.filter(col("doc_id") % 2 =!= 0)
         .select(col("doc_id"), col("source"), col("n_chars"), col("lang"))
         .write.mode("overwrite").parquet(s"$dir/gen2")
-      fs.create(new Path(s"$dir/_STAGED")).close()
     }
     spark.read.option("mergeSchema", "true").parquet(s"$dir/gen1", s"$dir/gen2")
       .groupBy("source")
@@ -3047,13 +2997,7 @@ object Curation {
     * is the point.
     */
   private[graft] def compactionDirs(spark: SparkSession, sfDir: String): (String, String) = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/documents.parquet")
-    val dir = s"${graft.WorkDirs.rootActive}/compact_$fp"
-    val fs = new Path(dir).getFileSystem(conf)
-    if (!fs.exists(new Path(s"$dir/_STAGED"))) {
-      fs.delete(new Path(dir), true)
+    val dir = graft.Staged.dir(spark, "compact", Seq(s"$sfDir/documents.parquet")) { dir =>
       val docs = Tables.documents(spark, sfDir)
       // 16 small shard files — the many-small-commits ingest shape
       docs.repartition(16, col("doc_id"))
@@ -3063,7 +3007,6 @@ object Curation {
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 1000000L)
         .parquet(s"$dir/compacted")
-      fs.create(new Path(s"$dir/_STAGED")).close()
     }
     (s"$dir/small", s"$dir/compacted")
   }

@@ -477,26 +477,20 @@ object Dedup {
     * the display schema the build query returns. Regenerated input
     * changes the fingerprint and rebuilds.
     */
-  private[graft] def clusterModelDir(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/documents.parquet")
-    s"${graft.WorkDirs.rootActive}/dedup/clusters_${new java.io.File(sfDir).getName}_${fp}_${hashFamily(spark)}"
-  }
+  private[graft] def clusterModelDir(spark: SparkSession, sfDir: String): String =
+    graft.Staged.path(spark,
+      s"dedup/clusters_${new java.io.File(sfDir).getName}_${hashFamily(spark)}",
+      Seq(s"$sfDir/documents.parquet"))
 
-  /** Build-if-absent gate for the cluster model: `clusters/` is written
-    * last, so its _SUCCESS marks the whole artifact. The BUILD cost
-    * stays on the build query (`x_dedup_clusters` always rebuilds);
-    * apply-side consumers go through this gate, exactly as a
+  /** The staged cluster model ([[graft.Staged]]). The BUILD cost stays
+    * on the build query (`x_dedup_clusters` always rebuilds it);
+    * apply-side consumers go through this layer, exactly as a
     * production pipeline materializes clusters once per corpus version
     * and applies them on every downstream pass.
     */
-  private[graft] def ensureClusterModel(spark: SparkSession, sfDir: String): String = {
-    import org.apache.hadoop.fs.Path
-    val dir = clusterModelDir(spark, sfDir)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$dir/clusters/_SUCCESS"))) buildClusterModel(spark, sfDir, dir)
-    dir
-  }
+  private[graft] def ensureClusterModel(spark: SparkSession, sfDir: String): String =
+    graft.Staged.at(spark, clusterModelDir(spark, sfDir), Seq(s"$sfDir/documents.parquet"))(
+      buildClusterModel(spark, sfDir, _))
 
   /** Near-dup CLUSTER formation — the step an actual dedup pipeline
     * needs after pairwise detection: connected components over the
@@ -536,8 +530,8 @@ object Dedup {
     // handed back is ALWAYS file-backed — downstream joins see a
     // parquet relation whether the build ran the driver fast path or
     // the distributed loop.
-    val dir = clusterModelDir(spark, sfDir)
-    buildClusterModel(spark, sfDir, dir)
+    val dir = graft.Staged.rebuild(spark, clusterModelDir(spark, sfDir),
+      Seq(s"$sfDir/documents.parquet"))(buildClusterModel(spark, sfDir, _))
     spark.read.parquet(s"$dir/clusters").orderBy("keep_id")
   }
 
@@ -1369,19 +1363,14 @@ object Dedup {
     * story promises. At lake scale the postings would additionally be
     * bucket-partitioned on (band, bucket) for probe-side pruning.
     */
-  private[graft] def baseIndexDir(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/documents.parquet")
-    s"${graft.WorkDirs.rootActive}/dedup/base_${new java.io.File(sfDir).getName}_${fp}_${hashFamily(spark)}"
-  }
+  private[graft] def baseIndexDir(spark: SparkSession, sfDir: String): String =
+    graft.Staged.path(spark,
+      s"dedup/base_${new java.io.File(sfDir).getName}_${hashFamily(spark)}",
+      Seq(s"$sfDir/documents.parquet"))
 
   private def ensureBaseIndex(spark: SparkSession, sfDir: String,
-      isNew: Column => Column): String = {
-    import org.apache.hadoop.fs.Path
-    val dir = baseIndexDir(spark, sfDir)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // shingles/ is written last, so its _SUCCESS marks the whole index
-    if (!fs.exists(new Path(s"$dir/shingles/_SUCCESS"))) {
+      isNew: Column => Column): String =
+    graft.Staged.at(spark, baseIndexDir(spark, sfDir), Seq(s"$sfDir/documents.parquet")) { dir =>
       val base = shingled(spark, sfDir).filter(!isNew(col("doc_id")))
       base.select(col("doc_id"), md5(col("text")).as("fp"))
         .select("fp").distinct()
@@ -1391,8 +1380,6 @@ object Dedup {
       base.select(col("doc_id"), col("shingles"))
         .write.mode("overwrite").parquet(s"$dir/shingles")
     }
-    dir
-  }
 
   def incrementalDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val isNew = (c: Column) => pmod(c, lit(5)) === 4

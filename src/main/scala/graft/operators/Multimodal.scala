@@ -200,16 +200,6 @@ object Multimodal {
         sum("keeper").as("keeper_id_sum"))
       .orderBy("format")
 
-  /** Fixture dir of loose media files for [[ingestFiles]], keyed by
-    * source fingerprint so regenerated testdata rebuilds it; exposed
-    * for the spec.
-    */
-  private[graft] def mediaFilesDir(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/documents.parquet")
-    s"${graft.WorkDirs.rootActive}/media/ingest_${new java.io.File(sfDir).getName}_$fp"
-  }
-
   /** File-based media ingestion — the path media actually arrives by
     * at lake scale: loose binary files on storage, read with Spark's
     * `binaryFile` source (path, mtime, length, content per file), ids
@@ -227,25 +217,22 @@ object Multimodal {
     * makes.
     */
   def ingestFiles(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val dir = mediaFilesDir(spark, sfDir)
-    val marker = Paths.get(dir, "_SUCCESS")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(Paths.get(dir))
+    val dir = graft.Staged.dir(spark, s"media/ingest_${new java.io.File(sfDir).getName}",
+        Seq(s"$sfDir/documents.parquet")) { dir =>
       // fixture materialization: ~4% of the corpus, written WHERE the
       // bytes are produced (executor-side foreachPartition — the scale
-      // idiom; media bytes never visit the driver). The driver's only
-      // write is the _SUCCESS marker after the job completes.
+      // idiom; media bytes never visit the driver), through the session
+      // conf shipped to the executors
+      val shipped = graft.sources.FooterMeta.sessionConf(spark)
       mediaTable(spark, sfDir).filter(col("doc_id") % 25 === 0)
         .select("doc_id", "media")
         .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+          val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(shipped.value)
           rows.foreach { r =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(dir, s"media_${r.getLong(0)}.bin"),
-              r.getAs[Array[Byte]](1))
+            val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/media_${r.getLong(0)}.bin"))
+            try out.write(r.getAs[Array[Byte]](1)) finally out.close()
           }
         }
-      Files.write(marker, Array.emptyByteArray)
     }
     spark.read.format("binaryFile").load(s"$dir/media_*.bin")
       .select(

@@ -118,8 +118,8 @@ object Similarity {
     * (1.26–1.43); 4M is the smallest probe with a robust margin
     * (1.65–2.04 across three loaded-host runs, vs 1.52–2.12 at 5M).
     * The rest of the cost comes out of the repeats: the corpus is
-    * generated ONCE into a fingerprint-keyed parquet (write-once,
-    * _SUCCESS-gated) and codegen/JIT warm up on a same-shape 50k-row
+    * generated ONCE into a parquet layer ([[graft.Staged]]) and
+    * codegen/JIT warm up on a same-shape 50k-row
     * file, so each sweep pays exactly two measured 4M-row executions
     * instead of four 5M ones.) Both formulations run to
     * completion, their (tiny) top-k results are compared for exact
@@ -148,15 +148,11 @@ object Similarity {
       .select(col("id").as("vec_id"),
         array((0 until dim).map(d =>
           (pmod(hash(col("id"), lit(d)).cast("bigint"), lit(1000)) / lit(500.0)) - lit(1.0)): _*).as("v"))
-    def ensure(path: String, rows: Long, parts: Int): String = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) synth(rows, parts).write.mode("overwrite").parquet(path)
-      path
-    }
-    val base = s"${graft.WorkDirs.rootActive}/xover"
-    val corpusPath = ensure(s"$base/corpus_${n}_$dim", n, 64)
-    val warmPath = ensure(s"$base/corpus_50000_$dim", 50000L, 8)
+    def ensure(rows: Long, parts: Int): String =
+      graft.Staged.dir(spark, s"xover/corpus_${rows}_$dim", Nil)(
+        synth(rows, parts).write.mode("overwrite").parquet(_))
+    val corpusPath = ensure(n, 64)
+    val warmPath = ensure(50000L, 8)
     def forms(path: String): (DataFrame, DataFrame) = {
       val corpus = spark.read.parquet(path)
         .withColumn("nrm", graft.functions.VectorExpressions.l2_norm(col("v")))
@@ -618,19 +614,15 @@ object Similarity {
     * assignment are paid once at write time; results are identical to
     * [[ivfTopK]] (spec-asserted) and share its retrain oracle.
     */
-  private[graft] def ivfLayoutPath(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/embeddings.parquet")
-    s"${graft.WorkDirs.rootActive}/ann/ivf_mf_${new java.io.File(sfDir).getName}_$fp"
-  }
+  private[graft] def ivfLayoutPath(spark: SparkSession, sfDir: String): String =
+    graft.Staged.path(spark, s"ann/ivf_mf_${new java.io.File(sfDir).getName}",
+      Seq(s"$sfDir/embeddings.parquet"))
 
   def ivfBucketedTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = corpus(spark, sfDir)
     val cents = trainedCentroids(spark, sfDir, base)
-    val out = ivfLayoutPath(spark, sfDir)
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$out/_SUCCESS")))
+    val out = graft.Staged.at(spark, ivfLayoutPath(spark, sfDir),
+        Seq(s"$sfDir/embeddings.parquet")) { out =>
       // LAKE-SHAPED fixture: hash-spread each inverted list across
       // LayoutFiles writer tasks so every list_id directory holds
       // MULTIPLE parquet files — at 100 TB a list is written by many
@@ -642,6 +634,7 @@ object Similarity {
         .select(col("list_id"), col("vec_id"), col("v"), col("nrm"))
         .repartition(LayoutFiles, col("vec_id"))
         .write.mode("overwrite").partitionBy("list_id").parquet(out)
+    }
     ivfRerank(spark.read.parquet(out), probeFrame(base, cents, IvfNProbe))
   }
 
@@ -666,11 +659,9 @@ object Similarity {
     * corpus, probes, re-ranks — so the gate certifies both the frozen
     * -model discipline and the union read.
     */
-  private[graft] def ivfIncrPath(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/embeddings.parquet")
-    s"${graft.WorkDirs.rootActive}/ann/ivf_incr_${new java.io.File(sfDir).getName}_$fp"
-  }
+  private[graft] def ivfIncrPath(spark: SparkSession, sfDir: String): String =
+    graft.Staged.path(spark, s"ann/ivf_incr_${new java.io.File(sfDir).getName}",
+      Seq(s"$sfDir/embeddings.parquet"))
 
   /** The 20 % ingest-batch convention shared with `x_dedup_incremental`. */
   private def incrIsNew: Column = pmod(col("vec_id"), lit(5)) === 4
@@ -681,32 +672,30 @@ object Similarity {
     * ingest ([[streamIndexIngest]]).
     */
   private def ensureIncrBase(spark: SparkSession, sfDir: String): (String, Seq[Array[Double]]) = {
-    import org.apache.hadoop.fs.Path
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/embeddings.parquet")
+    val emb = s"$sfDir/embeddings.parquet"
+    val fp = graft.sources.LayoutCache.fingerprint(spark.sparkContext.hadoopConfiguration, emb)
     val cents = quantizerCache.computeIfAbsent(s"$sfDir|$fp|incr-base",
       _ => trainQuantizer(corpus(spark, sfDir).filter(!incrIsNew)))
     val out = ivfIncrPath(spark, sfDir)
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$out/base/_SUCCESS")))
+    graft.Staged.at(spark, s"$out/base", Seq(emb)) { dir =>
       assignTo(cents)(corpus(spark, sfDir).filter(!incrIsNew))
         .select(col("list_id"), col("vec_id"), col("v"), col("nrm"))
         .repartition(LayoutFiles, col("vec_id"))
-        .write.mode("overwrite").partitionBy("list_id").parquet(s"$out/base")
+        .write.mode("overwrite").partitionBy("list_id").parquet(dir)
+    }
     (out, cents)
   }
 
   def ivfIncrementalTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = corpus(spark, sfDir)
     val (out, cents) = ensureIncrBase(spark, sfDir)
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the ingest step: ONLY the new batch is scanned and assigned
-    if (!fs.exists(new Path(s"$out/delta/_SUCCESS")))
+    graft.Staged.at(spark, s"$out/delta", Seq(s"$sfDir/embeddings.parquet")) { dir =>
       assignTo(cents)(base.filter(incrIsNew))
         .select(col("list_id"), col("vec_id"), col("v"), col("nrm"))
         .repartition(LayoutFiles, col("vec_id"))
-        .write.mode("overwrite").partitionBy("list_id").parquet(s"$out/delta")
+        .write.mode("overwrite").partitionBy("list_id").parquet(dir)
+    }
     val index = spark.read.parquet(s"$out/base")
       .unionByName(spark.read.parquet(s"$out/delta"))
     ivfRerank(index, probeFrame(base, cents, IvfNProbe))
@@ -736,22 +725,25 @@ object Similarity {
   def streamIndexIngest(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     val (out, cents) = ensureIncrBase(spark, sfDir)
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new Path(s"$out/stream_delta/_INGEST_COMPLETE")
-    if (!fs.exists(done)) {
-      // the arrival directory: the ingest batch lands as MANY committed
-      // files (a file stream source reads directories, and one file per
-      // micro-batch is the change-feed arrival pattern being modeled)
-      if (!fs.exists(new Path(s"$out/feed/_SUCCESS")))
-        corpus(spark, sfDir).filter(incrIsNew)
-          .repartition(LayoutFiles, col("vec_id"))
-          .write.mode("overwrite").parquet(s"$out/feed")
-      val feedSchema = spark.read.parquet(s"$out/feed").schema
+    // the arrival directory: the ingest batch lands as MANY committed
+    // files (a file stream source reads directories, and one file per
+    // micro-batch is the change-feed arrival pattern being modeled)
+    val feedDir = graft.Staged.at(spark, s"$out/feed", Seq(s"$sfDir/embeddings.parquet")) {
+      corpus(spark, sfDir).filter(incrIsNew)
+        .repartition(LayoutFiles, col("vec_id"))
+        .write.mode("overwrite").parquet(_)
+    }
+    graft.Staged.at(spark, s"$out/stream_delta", Seq(feedDir)) { streamDelta =>
+      // a fresh checkpoint: a kept one would replay nothing into the
+      // rebuilt layer
+      val ckpt = new Path(s"$out/stream_ckpt")
+      ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ckpt, true)
+      val feedSchema = spark.read.parquet(feedDir).schema
       val feed = spark.readStream.schema(feedSchema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(s"$out/feed")
+        .parquet(feedDir)
       val q = feed.writeStream
-        .option("checkpointLocation", s"$out/stream_ckpt")
+        .option("checkpointLocation", ckpt.toString)
         // exactly-once per batch: foreachBatch is at-least-once on
         // crash-retry, so each batch OVERWRITES its own batch=<id>
         // directory instead of appending to a shared one — a replayed
@@ -762,13 +754,12 @@ object Similarity {
           assignTo(cents)(batch.toDF())
             .select(col("list_id"), col("vec_id"), col("v"), col("nrm"))
             .write.mode("overwrite").partitionBy("list_id")
-            .parquet(s"$out/stream_delta/batch=$batchId")
+            .parquet(s"$streamDelta/batch=$batchId")
           ()
         }
         .start()
       try q.processAllAvailable()
       finally q.stop()
-      fs.create(done).close()
     }
     val index = spark.read.parquet(s"$out/base")
       .unionByName(spark.read.parquet(s"$out/stream_delta")
@@ -935,11 +926,9 @@ object Similarity {
     * stale buckets ([[graft.sources.LayoutCache]]); exposed for the
     * staleness spec.
     */
-  private[graft] def bucketedLayoutPath(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/embeddings.parquet")
-    s"${graft.WorkDirs.rootActive}/ann/banded_mf_${new java.io.File(sfDir).getName}_$fp"
-  }
+  private[graft] def bucketedLayoutPath(spark: SparkSession, sfDir: String): String =
+    graft.Staged.path(spark, s"ann/banded_mf_${new java.io.File(sfDir).getName}",
+      Seq(s"$sfDir/embeddings.parquet"))
 
   /** Writer tasks per bucketed-layout write: each bucket directory ends
     * up with up to this many parquet files (hash-spread on vec_id), the
@@ -950,14 +939,13 @@ object Similarity {
 
   def lshBucketedTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.hadoop.fs.Path
-    val out = bucketedLayoutPath(spark, sfDir)
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$out/_SUCCESS")))
+    val out = graft.Staged.at(spark, bucketedLayoutPath(spark, sfDir),
+        Seq(s"$sfDir/embeddings.parquet")) { out =>
       // many-files-per-bucket lake fixture — see ivfBucketedTopK's note
       bandedCorpus(spark, sfDir)
         .repartition(LayoutFiles, col("vec_id"))
         .write.mode("overwrite").partitionBy("band", "bval").parquet(out)
+    }
     val corpusOnDisk = spark.read.parquet(out)
     val qb = bandedCorpus(spark, sfDir).filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("band").as("qband"), col("bval").as("qbval"))
@@ -1067,18 +1055,14 @@ object Similarity {
     * edge-sized scan — exactly how a production graph pipeline stages
     * its edge list before the iterate phase.
     */
-  private def knnEdgesOnDisk(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/embeddings.parquet")
-    val out = s"${graft.WorkDirs.rootActive}/ann/knn_edges_${new java.io.File(sfDir).getName}_$fp"
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$out/_SUCCESS")))
+  private def knnEdgesOnDisk(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(graft.Staged.dir(spark,
+        s"ann/knn_edges_${new java.io.File(sfDir).getName}",
+        Seq(s"$sfDir/embeddings.parquet")) {
       knnScored(spark, sfDir).select("src", "dst")
         .repartition(col("src"))
-        .write.mode("overwrite").parquet(out)
-    spark.read.parquet(out)
-  }
+        .write.mode("overwrite").parquet(_)
+    })
 
   /** The iteration core over arbitrary (vec_id) nodes and (src, dst)
     * edges — exposed so the property spec can drive it with random

@@ -87,13 +87,9 @@ object ZOrder {
     * groups (64 KiB) stand in for the 128 MiB groups a lake write would
     * use — what matters is groups ≫ 1 so stats have pruning power.
     */
-  def zOrderedOrdersPath(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.sources.LayoutCache.fingerprint(
-      spark.sparkContext.hadoopConfiguration, s"$sfDir/orders.parquet")
-    val out = s"${graft.WorkDirs.rootActive}/zorder/orders_${new java.io.File(sfDir).getName}_$fp"
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$out/_SUCCESS")))
+  def zOrderedOrdersPath(spark: SparkSession, sfDir: String): String =
+    graft.Staged.dir(spark, s"zorder/orders_${new java.io.File(sfDir).getName}",
+        Seq(s"$sfDir/orders.parquet")) { out =>
       zMapped(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
           col("o_totalprice"), col("zval"))
@@ -102,8 +98,7 @@ object ZOrder {
         .write.mode("overwrite")
         .option("parquet.block.size", (64 * 1024).toString)
         .parquet(out)
-    out
-  }
+    }
 
   // ---- Hilbert curve (round-11) ----
   //

@@ -97,16 +97,14 @@ object BenchRunners {
     * — the reference's stats-enabled/disabled axis expressed as the
     * Spark conf that consumes those stats.
     */
-  /** Generates (once, _SUCCESS-gated) the sorted, 1 MiB-row-group file
+  /** Generates (once, [[graft.Staged]]) the sorted, 1 MiB-row-group file
     * that [[pushdownBenchmark]] and [[pushdownRows]] share; returns its
     * path. Deterministic input: the write is the expensive half of the
     * op and isn't what either query measures.
     */
   private[graft] def ensurePushdownFile(
-      spark: SparkSession, numRows: Long, workDir: String): String = {
-    val path = s"$workDir/pushdown_bench_$numRows"
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$path/_SUCCESS"))) {
+      spark: SparkSession, numRows: Long, workDir: String): String =
+    graft.Staged.at(spark, s"$workDir/pushdown_bench_$numRows", Nil) { path =>
       // low-cardinality sorted column -> tight row-group min/max -> skippable
       val df = spark.range(numRows).selectExpr(
         "id AS k",
@@ -114,8 +112,6 @@ object BenchRunners {
       ParquetKnobs.write(df.repartitionByRange(8, org.apache.spark.sql.functions.col("k")),
         path, ParquetKnobs.WriteConfig(rowGroupBytes = 1024 * 1024))
     }
-    path
-  }
 
   def pushdownBenchmark(
       spark: SparkSession,
@@ -249,34 +245,23 @@ object BenchRunners {
       pageSizes: Seq[Int],
       workDir: String): DataFrame = {
     import spark.implicits._
+    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rows = for {
       nc <- numColsList
       rg <- rowGroupSizes
       ps <- pageSizes
       stats <- Seq(1, 0)
     } yield {
-      // TIMED writes land in their own scratch dirs, never the gated
+      // TIMED writes land in their own scratch dirs, never the staged
       // files rowGroupLayout's byte oracle reads (see the
-      // compressionBenchmark note: rewrites are not bit-reproducible)
-      val path = s"$workDir/rg_timed_${nc}c_${rg}r_${ps}p_$stats"
+      // compressionBenchmark note: rewrites are not bit-reproducible).
       // Write-once across JVMs (round-9 verdict task 6): the generator
-      // is deterministic, so a config dir whose marker records the
-      // exact (cols, rows, rg, ps, stats) tuple is reused and sweep
-      // repeats measure DECODE only; write_time_ms then reports the
-      // marker's once-measured generation time. Any config change
-      // misses the marker and rewrites.
-      val cfgStr = s"$nc,$numRows,$rg,$ps,$stats"
-      val markerPath = new Path(s"$path/_GRAFT_GRID_CFG")
-      val fs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val cachedWriteMs: Option[Double] =
-        if (fs.exists(markerPath) && fs.exists(new Path(s"$path/_SUCCESS"))) {
-          val in = fs.open(markerPath)
-          try {
-            val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-            if (lines.headOption.contains(cfgStr)) lines.lift(1).map(_.toDouble) else None
-          } finally in.close()
-        } else None
-      val writeMs = cachedWriteMs.getOrElse {
+      // is deterministic, so the layer named by the exact (cols, rows,
+      // rg, ps, stats) tuple is reused and sweep repeats measure DECODE
+      // only; write_time_ms then reports the once-measured generation
+      // time the build stored beside the data.
+      val dir = graft.Staged.at(spark,
+          s"$workDir/rg_timed_${nc}c_${numRows}n_${rg}r_${ps}p_$stats", Nil) { dir =>
         // single output file (the reference's layout): with the default
         // 32 generator partitions every part file would hold ONE sub-
         // block-size row group and the row-group-size axis would not
@@ -284,14 +269,18 @@ object BenchRunners {
         val df = WideTableGen.wide(spark, nc, numRows.toLong).coalesce(1)
         // the stats axis is REAL statistics on/off (StatsLevel NONE
         // suppresses min/max entirely), not the dictionary proxy
-        val (_, w) = timeMs(ParquetKnobs.write(df, path,
+        val (_, w) = timeMs(ParquetKnobs.write(df, s"$dir/data",
           ParquetKnobs.WriteConfig(
             rowGroupBytes = ParquetKnobs.rowGroupBytesFor(rg, nc),
             pageBytes = ps,
             statsLevel = stats)))
-        val out = fs.create(markerPath, true)
-        try out.write(s"$cfgStr\n$w".getBytes("UTF-8")) finally out.close()
-        w
+        val out = fs.create(new Path(s"$dir/write_ms"))
+        try out.write(w.toString.getBytes("UTF-8")) finally out.close()
+      }
+      val path = s"$dir/data"
+      val writeMs = {
+        val in = fs.open(new Path(s"$dir/write_ms"))
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.toDouble finally in.close()
       }
       val (thriftUs, schemaUs, _) = footerTimesUs(spark, path)
       val (_, statsDecodeMs) = timeMs {
@@ -342,7 +331,7 @@ object BenchRunners {
       if (ParquetKnobs.codecAvailable(codec)) {
         val df = WideTableGen.wide(spark, nc, numRows)
         // TIMED writes land in their own scratch dirs, never the
-        // _SUCCESS-gated files codecRoundtrip's byte oracle reads:
+        // staged files codecRoundtrip's byte oracle reads:
         // parquet-mr sizes row groups from a memory ESTIMATE, so
         // rewriting identical data is not bit-reproducible (observed
         // +-1 byte), and an oracle-read file must be write-once
@@ -475,8 +464,7 @@ object BenchRunners {
     * were only visible in one-off BASELINE_QUALITATIVE runs. The wide
     * file is generated ONCE ([[wideFileMatches]] gate); each round then
     * pays a median-of-5 footer decode (~ms at 1000 cols) plus one
-    * 10-column subset read over the small file — cheap by construction,
-    * with a BENCH_MEDIANS note recording the cost.
+    * 10-column subset read over the small file — cheap by construction.
     */
   def wideFooterProbe(
       spark: SparkSession, nc: Int, numRows: Long, workDir: String): DataFrame = {
@@ -540,11 +528,9 @@ object BenchRunners {
     import org.apache.spark.sql.functions.{count, lit, max => fmax, min => fmin}
     import spark.implicits._
     val rows = numColsList.map { nc =>
-      val path = s"$workDir/read_bench_${nc}cols"
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new Path(s"$path/_SUCCESS")))
-        ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, seed), path,
-          ParquetKnobs.WriteConfig(codec = "snappy"))
+      val path = graft.Staged.at(spark, s"$workDir/read_bench_${nc}cols", Nil)(
+        ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, seed), _,
+          ParquetKnobs.WriteConfig(codec = "snappy")))
       val r = spark.read.parquet(path)
         .agg(count(lit(1)), fmin("col_0"), fmax("col_0")).first()
       (nc, r.getLong(0), math.max(1, nc / 2), (nc + 9) / 10,
@@ -565,11 +551,9 @@ object BenchRunners {
     import org.apache.spark.sql.functions.{count, lit, max => fmax, min => fmin}
     import spark.implicits._
     val rows = ParquetKnobs.codecs.map { codec =>
-      val path = s"$workDir/comp_bench_${nc}c_$codec"
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new Path(s"$path/_SUCCESS")))
-        ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows), path,
-          ParquetKnobs.WriteConfig(codec = codec))
+      val path = graft.Staged.at(spark, s"$workDir/comp_bench_${nc}c_$codec", Nil)(
+        ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows), _,
+          ParquetKnobs.WriteConfig(codec = codec)))
       val r = spark.read.parquet(path)
         .agg(count(lit(1)), fmin("col_0"), fmax("col_0")).first()
       (algoCode(codec), r.getLong(0), r.getFloat(1), r.getFloat(2),
@@ -601,13 +585,11 @@ object BenchRunners {
       ps <- pageSizes
       stats <- Seq(1, 0)
     } yield {
-      val path = s"$workDir/rg_bench_${nc}c_${rg}r_${ps}p_$stats"
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new Path(s"$path/_SUCCESS")))
-        ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows.toLong).coalesce(1), path,
+      val path = graft.Staged.at(spark, s"$workDir/rg_bench_${nc}c_${rg}r_${ps}p_$stats", Nil)(
+        ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows.toLong).coalesce(1), _,
           ParquetKnobs.WriteConfig(
             rowGroupBytes = ParquetKnobs.rowGroupBytesFor(rg, nc),
-            pageBytes = ps, statsLevel = stats))
+            pageBytes = ps, statsLevel = stats)))
       val blocks = FooterMeta.footer(conf, FooterMeta.parquetFiles(conf, path).head)
         .meta.getBlocks.asScala
       val nRg = blocks.size

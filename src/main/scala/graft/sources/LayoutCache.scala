@@ -3,20 +3,21 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-/** Content fingerprints for source-derived cached layouts (the banded
-  * ANN corpus, the date-sorted lineitem copy, the bucketed join
-  * tables).
+/** Content fingerprints of the inputs of derived layouts: the key of
+  * every [[graft.Staged]] layer's path and the input record in its
+  * marker, of the bucketed join tables, and of the in-memory trained
+  * models.
   *
-  * Round-3 defect this closes: layouts were keyed only by `_SUCCESS` +
-  * the source directory's basename, so regenerating testdata under the
-  * same path silently served candidates from STALE buckets — a wrong-
-  * answer class that rows-only checks can't catch. The fingerprint is
-  * (total length, max modification time) of the source file or
-  * directory tree; any rewrite of the source changes it, which changes
-  * the derived layout's path, which forces regeneration. Stale layouts
-  * are left behind in the scratch dir (gitignored, bounded by testdata
-  * generations) — at lake scale the same key would live in a catalog's
-  * table-version property instead of a path suffix.
+  * Round-3 defect this closes: layouts were keyed only by a marker file
+  * + the source directory's basename, so regenerating testdata under
+  * the same path silently served candidates from STALE buckets — a
+  * wrong-answer class that rows-only checks can't catch. The
+  * fingerprint is (total length, max modification time) of the source
+  * file or directory tree; any rewrite of the source changes it, which
+  * changes the derived layout's path, which forces regeneration. Stale
+  * layouts are left behind in the scratch dir (gitignored, bounded by
+  * testdata generations) — at lake scale the same key would live in a
+  * catalog's table-version property instead of a path suffix.
   */
 object LayoutCache {
 

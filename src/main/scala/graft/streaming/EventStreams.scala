@@ -58,13 +58,31 @@ object EventStreams {
     * nanos-era testdata (nanosAsLong), TimestampType in the
     * micros-era (see [[graft.Tables.events]]). FileStreamSource needs
     * an explicit schema, and it must match the files, so resolve it
-    * from the batch reader's footer-derived schema once per directory
-    * (a footer read, no job).
+    * from the batch reader's footer-derived schema once per file
+    * version: keyed by the file's [[graft.sources.LayoutCache]]
+    * fingerprint, so a rewrite under the same path is re-read.
     */
   private val tsTypeCache = new java.util.concurrent.ConcurrentHashMap[String, DataType]()
-  private def rawTsType(spark: SparkSession, sfDir: String): DataType =
-    tsTypeCache.computeIfAbsent(sfDir, _ =>
-      spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType)
+  private[graft] def rawTsType(spark: SparkSession, sfDir: String): DataType = {
+    val events = s"$sfDir/events.parquet"
+    val fp = graft.sources.LayoutCache.fingerprint(spark.sparkContext.hadoopConfiguration, events)
+    tsTypeCache.computeIfAbsent(s"$events|$fp", _ =>
+      spark.read.parquet(events).schema("ts").dataType)
+  }
+
+  /** Writes `df` as the one parquet file `file` (through a temp dir
+    * beside it): staged stream inputs are one file per micro-batch.
+    */
+  private def writeOneFile(spark: SparkSession, df: DataFrame, file: String): Unit = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val tmp = new Path(s"$file-tmp")
+    val fs = tmp.getFileSystem(conf)
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = fs.listStatus(tmp).map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+    FileUtil.copy(fs, part, fs, new Path(file), false, conf)
+    fs.delete(tmp, true)
+  }
 
   /** Schema of the raw events parquet with ts as this data's type. */
   private def rawSchema(tsType: DataType) = StructType(Seq(
@@ -352,25 +370,12 @@ object EventStreams {
     * current watermark, no state lookup.
     */
   def streamLateData(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/events.parquet")
-    val stageDir = s"${graft.WorkDirs.rootActive}/stream/events_late_$fp"
-    val stage = new Path(stageDir)
-    val fs = stage.getFileSystem(conf)
-    if (!fs.exists(new Path(s"$stageDir/_STAGED"))) {
-      fs.delete(stage, true)
-      fs.mkdirs(stage)
+    val stageDir = graft.Staged.dir(spark, "stream/events_late",
+        Seq(s"$sfDir/events.parquet")) { stageDir =>
       val tsT = rawTsType(spark, sfDir)
       val raw = spark.read.schema(rawSchema(tsT)).parquet(s"$sfDir/events.parquet")
-      def stagePart(df: DataFrame, name: String): Unit = {
-        val tmp = s"$stageDir-tmp-$name"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp))
-          .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-        FileUtil.copy(fs, part, fs, new Path(s"$stageDir/$name.parquet"), false, conf)
-        fs.delete(new Path(tmp), true)
-      }
+      def stagePart(df: DataFrame, name: String): Unit =
+        writeOneFile(spark, df, s"$stageDir/$name.parquet")
       val bulk = raw.filter(col("event_id") % 5 =!= 0)
       stagePart(bulk, "0_bulk")
       // on-time row at the bulk max timestamp: watermark-neutral, but
@@ -384,7 +389,6 @@ object EventStreams {
       stagePart(raw.filter(col("event_id") % 5 === 0), "2_late")
       stagePart(syntheticEvent(spark, tsT, -1L, 4102444800L * 1000000000L, "__sentinel"),
         "3_sentinel")
-      fs.create(new Path(s"$stageDir/_STAGED")).close()
     }
 
     val src = normTs(spark.readStream
@@ -428,21 +432,18 @@ object EventStreams {
     * result must STILL equal the batch answer for all closed windows,
     * so it shares [[streamWindowAppend]]'s oracle.
     *
-    * The sink directory is keyed on the source fingerprint and rebuilt
-    * from a fresh checkpoint when absent; the read-back goes through
+    * The sink directory is keyed on the source fingerprint and staged
+    * against the input layer ([[graft.Staged]]), rebuilt from a fresh
+    * checkpoint when absent or stale; the read-back goes through
     * the commit log (Spark lists `_spark_metadata`, not the raw
     * directory), which is what makes concurrent-writer garbage
     * invisible to readers at scale.
     */
   def streamFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/events.parquet")
+    val events = s"$sfDir/events.parquet"
     val stageDir = stagedAppendDir(spark, sfDir)
-    val outDir = s"${graft.WorkDirs.rootActive}/stream/events_filesink_$fp"
-    val fs = new Path(outDir).getFileSystem(conf)
-    if (!fs.exists(new Path(s"$outDir/_DONE"))) {
-      fs.delete(new Path(outDir), true)
+    val outDir = graft.Staged.at(spark, graft.Staged.path(spark, "stream/events_filesink",
+        Seq(events)), Seq(events, stageDir)) { outDir =>
       val src = normTs(spark.readStream
         .schema(rawSchema(rawTsType(spark, sfDir)))
         .option("maxFilesPerTrigger", "1")
@@ -464,7 +465,6 @@ object EventStreams {
         try q.processAllAvailable()
         finally q.stop()
       }
-      fs.create(new Path(s"$outDir/_DONE")).close()
     }
     spark.read.parquet(s"$outDir/data")
       .filter(col("event_type") =!= "__sentinel")
@@ -475,30 +475,16 @@ object EventStreams {
     * [[streamWindowAppend]], extracted so the file-sink twin reuses the
     * same two-batch drive-to-completion input.
     */
-  private def stagedAppendDir(spark: SparkSession, sfDir: String): String = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/events.parquet")
-    val stageDir = s"${graft.WorkDirs.rootActive}/stream/events_append_$fp"
-    val stage = new Path(stageDir)
-    val fs = stage.getFileSystem(conf)
-    if (!fs.exists(new Path(s"$stageDir/_STAGED"))) {
-      fs.delete(stage, true)
-      fs.mkdirs(stage)
+  private def stagedAppendDir(spark: SparkSession, sfDir: String): String =
+    graft.Staged.dir(spark, "stream/events_append", Seq(s"$sfDir/events.parquet")) { stageDir =>
+      import org.apache.hadoop.fs.{FileUtil, Path}
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = new Path(stageDir).getFileSystem(conf)
       FileUtil.copy(fs, new Path(s"$sfDir/events.parquet"),
         fs, new Path(s"$stageDir/0_events.parquet"), false, conf)
-      val sentinelTmp = s"$stageDir-sentinel-tmp"
-      syntheticEvent(spark, rawTsType(spark, sfDir), -1L,
-          4102444800L * 1000000000L, "__sentinel")
-        .coalesce(1).write.mode("overwrite").parquet(sentinelTmp)
-      val part = fs.listStatus(new Path(sentinelTmp))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      FileUtil.copy(fs, part, fs, new Path(s"$stageDir/1_sentinel.parquet"), false, conf)
-      fs.delete(new Path(sentinelTmp), true)
-      fs.create(new Path(s"$stageDir/_STAGED")).close()
+      writeOneFile(spark, syntheticEvent(spark, rawTsType(spark, sfDir), -1L,
+        4102444800L * 1000000000L, "__sentinel"), s"$stageDir/1_sentinel.parquet")
     }
-    stageDir
-  }
 
   /** Streaming point-in-time enrichment through the CUSTOM as-of exec
     * (round-11): each micro-batch of clicks is enriched against the
@@ -1335,29 +1321,13 @@ object EventStreams {
     * outer's eviction batch, inherent to append-mode outer semantics).
     */
   def streamStreamOuter(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/events.parquet")
-    val stageDir = s"${graft.WorkDirs.rootActive}/stream/events_outer_$fp"
-    val stage = new Path(stageDir)
-    val fs = stage.getFileSystem(conf)
-    if (!fs.exists(new Path(s"$stageDir/_STAGED"))) {
-      fs.delete(stage, true)
-      fs.mkdirs(stage)
+    val stageDir = graft.Staged.dir(spark, "stream/events_outer",
+        Seq(s"$sfDir/events.parquet")) { stageDir =>
       val tsT = rawTsType(spark, sfDir)
-      def stagePart(df: DataFrame, name: String): Unit = {
-        val tmp = s"$stageDir-tmp-$name"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp))
-          .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-        FileUtil.copy(fs, part, fs, new Path(s"$stageDir/$name.parquet"), false, conf)
-        fs.delete(new Path(tmp), true)
-      }
-      stagePart(spark.read.schema(rawSchema(tsT)).parquet(s"$sfDir/events.parquet"),
-        "0_events")
-      stagePart(syntheticEvent(spark, tsT, -1L, 4102444800L * 1000000000L, "__sentinel"),
-        "1_sentinel")
-      fs.create(new Path(s"$stageDir/_STAGED")).close()
+      writeOneFile(spark, spark.read.schema(rawSchema(tsT)).parquet(s"$sfDir/events.parquet"),
+        s"$stageDir/0_events.parquet")
+      writeOneFile(spark, syntheticEvent(spark, tsT, -1L, 4102444800L * 1000000000L,
+        "__sentinel"), s"$stageDir/1_sentinel.parquet")
     }
     // both staged files land in ONE batch (no maxFilesPerTrigger):
     // the watermark computed from batch 0's max event time (the
@@ -1429,34 +1399,13 @@ object EventStreams {
     * micro-batches and the merge path is exercised, not bypassed.
     */
   def streamUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/events.parquet")
-    val stageDir = s"${graft.WorkDirs.rootActive}/stream/events_upsert_stage_$fp"
-    val outDir = s"${graft.WorkDirs.rootActive}/stream/events_upsert_$fp"
-    val fs = new Path(outDir).getFileSystem(conf)
-    if (!fs.exists(new Path(s"$stageDir/_STAGED"))) {
-      fs.delete(new Path(stageDir), true)
-      fs.mkdirs(new Path(stageDir))
-      Seq(0, 1).foreach { half =>
-        val tmp = s"$stageDir-tmp-$half"
-        // stage from the RAW reader so ts keeps the file's layout and
-        // the stream schema stays uniform across staged files
-        spark.read.parquet(s"$sfDir/events.parquet")
-          .filter(col("event_id") % 2 === half)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp))
-          .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-        FileUtil.copy(fs, part, fs, new Path(s"$stageDir/${half}_half.parquet"), false, conf)
-        fs.delete(new Path(tmp), true)
-      }
-      fs.create(new Path(s"$stageDir/_STAGED")).close()
-    }
-    if (!fs.exists(new Path(s"$outDir/_DONE"))) {
-      fs.delete(new Path(outDir), true)
+    import org.apache.hadoop.fs.Path
+    val events = s"$sfDir/events.parquet"
+    val outDir = graft.Staged.at(spark, graft.Staged.path(spark, "stream/events_upsert",
+        Seq(events)), Seq(events, upsertStageDir(spark, sfDir))) { outDir =>
       upsertRun(spark, sfDir, outDir, _ => ())
-      fs.create(new Path(s"$outDir/_DONE")).close()
     }
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val last = fs.listStatus(new Path(outDir)).map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
       .map(_.drop(1).toLong).max
@@ -1466,21 +1415,31 @@ object EventStreams {
       .orderBy("user_id")
   }
 
+  /** The events table staged as the two half-files [[streamUpsert]]
+    * streams (event_id parity split).
+    */
+  private def upsertStageDir(spark: SparkSession, sfDir: String): String =
+    graft.Staged.dir(spark, "stream/events_upsert_stage",
+        Seq(s"$sfDir/events.parquet")) { stageDir =>
+      // stage from the RAW reader so ts keeps the file's layout and
+      // the stream schema stays uniform across staged files
+      Seq(0, 1).foreach { half =>
+        writeOneFile(spark, spark.read.parquet(s"$sfDir/events.parquet")
+          .filter(col("event_id") % 2 === half), s"$stageDir/${half}_half.parquet")
+      }
+    }
+
   /** The [[streamUpsert]] write pipeline against an arbitrary snapshot
-    * directory (expects the staged half-files to exist — run
-    * [[streamUpsert]] once first). `afterApply` fires AFTER the sink
-    * write for a batch but BEFORE Spark commits that batch to the
-    * checkpoint — throwing from it is exactly the crash window the
-    * exactly-once claim must survive, which the failure-injection spec
-    * exercises by crashing batch 0 and restarting from the same
-    * checkpoint.
+    * directory. `afterApply` fires AFTER the sink write for a batch but
+    * BEFORE Spark commits that batch to the checkpoint — throwing from
+    * it is exactly the crash window the exactly-once claim must
+    * survive, which the failure-injection spec exercises by crashing
+    * batch 0 and restarting from the same checkpoint.
     */
   private[graft] def upsertRun(
       spark: SparkSession, sfDir: String, outDir: String,
       afterApply: Long => Unit): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = graft.sources.LayoutCache.fingerprint(conf, s"$sfDir/events.parquet")
-    val stageDir = s"${graft.WorkDirs.rootActive}/stream/events_upsert_stage_$fp"
+    val stageDir = upsertStageDir(spark, sfDir)
     val src = normTs(spark.readStream
       .schema(rawSchema(rawTsType(spark, sfDir)))
       .option("maxFilesPerTrigger", "1")

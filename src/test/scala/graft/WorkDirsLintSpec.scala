@@ -63,6 +63,26 @@ class WorkDirsLintSpec extends AnyFunSuite {
         "make it an argument or a session conf key instead:\n  " + hits.mkString("\n  "))
   }
 
+  // a marker-file name (`_` then upper case) at the start of a string
+  // literal or after a `/` in it: `s"$dir/_SUCCESS"`, `"_DONE"`
+  private val markerLiteral = raw""""(?:[^"]*/)?_[A-Z][A-Z_]*""".r
+
+  test("src/main names no staging marker outside Staged — every layer goes through it") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root),
+      s"expected to run from repo root, cwd=${Paths.get("").toAbsolutePath}")
+    val hits = for {
+      f <- scalaFiles(root)
+      if f.getFileName.toString != "Staged.scala"
+      (line, idx) <- Files.readAllLines(f).asScala.zipWithIndex
+      if !line.trim.startsWith("//") && !line.trim.startsWith("*")
+      if markerLiteral.findFirstIn(line).isDefined
+    } yield s"$f:${idx + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      "a per-site marker decides on its own when a layer is still good — " +
+        "stage the layer with graft.Staged.dir/at instead:\n  " + hits.mkString("\n  "))
+  }
+
   test("WorkDirs resolution: conf overrides env overrides the checkout default") {
     val spark = TestSpark.spark
     val dflt = WorkDirs.root(spark)
