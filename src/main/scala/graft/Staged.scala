@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.sources.LayoutCache
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -29,7 +30,9 @@ import org.apache.spark.sql.SparkSession
   * rename would break. A `build` that throws leaves no marker, so the
   * next call rebuilds. The marker's name starts with `_`, so Parquet,
   * `binaryFile` and stream readers skip it. Everything goes through the
-  * Hadoop `FileSystem`, so a work dir on a DFS behaves like a local one.
+  * Hadoop `FileSystem` under the session's Hadoop conf (runtime
+  * `spark.conf` entries included, as the layer writes see them), so a
+  * work dir on a DFS behaves like a local one.
   */
 object Staged {
   private val Marker = "_STAGED"
@@ -38,46 +41,41 @@ object Staged {
     * without inputs): where [[dir]] stages the layer, for callers that
     * need only the location.
     */
-  def path(spark: SparkSession, name: String, inputs: Seq[String]): String =
-    keyed(spark, name, inputs.map(LayoutCache.fingerprint(conf(spark), _)))
+  def path(spark: SparkSession, name: String, inputs: Seq[String]): String = {
+    val conf = spark.sessionState.newHadoopConf()
+    keyed(spark, name, inputs.map(LayoutCache.fingerprint(conf, _)))
+  }
 
-  /** Stages the layer at [[path]] (building it if absent or stale) and
-    * returns that directory.
+  /** Stages the layer at [[path]] (building it if absent or stale, or
+    * always when `rebuild`: for a query whose job is the build itself,
+    * so that later readers reuse what it wrote) and returns that
+    * directory.
     */
-  def dir(spark: SparkSession, name: String, inputs: Seq[String])(
+  def dir(spark: SparkSession, name: String, inputs: Seq[String], rebuild: Boolean = false)(
       build: String => Unit): String = {
-    val fps = inputs.map(LayoutCache.fingerprint(conf(spark), _))
-    stage(spark, keyed(spark, name, fps), inputs.zip(fps), build, force = false)
+    val conf = spark.sessionState.newHadoopConf()
+    val fps = inputs.map(LayoutCache.fingerprint(conf, _))
+    stage(conf, keyed(spark, name, fps), inputs.zip(fps), build, rebuild)
   }
 
   /** Stages a layer at a fixed directory: one nested inside another
-    * layer, or one whose path an oracle addresses textually. Its inputs
+    * layer, or a fixture under a directory its caller chose. Its inputs
     * key only the marker, not the path.
     */
   def at(spark: SparkSession, dir: String, inputs: Seq[String])(
-      build: String => Unit): String =
-    stage(spark, dir, fingerprinted(spark, inputs), build, force = false)
-
-  /** [[at]], but builds even an intact layer: for a query whose job is
-    * the build itself, so that later readers reuse what it wrote.
-    */
-  def rebuild(spark: SparkSession, dir: String, inputs: Seq[String])(
-      build: String => Unit): String =
-    stage(spark, dir, fingerprinted(spark, inputs), build, force = true)
-
-  private def conf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
-
-  private def fingerprinted(spark: SparkSession, inputs: Seq[String]): Seq[(String, String)] =
-    inputs.map(i => i -> LayoutCache.fingerprint(conf(spark), i))
+      build: String => Unit): String = {
+    val conf = spark.sessionState.newHadoopConf()
+    stage(conf, dir, inputs.map(i => i -> LayoutCache.fingerprint(conf, i)), build, force = false)
+  }
 
   private def keyed(spark: SparkSession, name: String, fps: Seq[String]): String =
     if (fps.isEmpty) s"${WorkDirs.root(spark)}/$name"
     else s"${WorkDirs.root(spark)}/${name}_${fps.mkString("_")}"
 
-  private def stage(spark: SparkSession, dir: String, inputs: Seq[(String, String)],
+  private def stage(conf: Configuration, dir: String, inputs: Seq[(String, String)],
       build: String => Unit, force: Boolean): String = {
     val root = new Path(dir)
-    val fs = root.getFileSystem(conf(spark))
+    val fs = root.getFileSystem(conf)
     val qdir = fs.makeQualified(root)
     val head = s"dir\t$qdir" +: inputs.map { case (p, fp) => s"input\t$p\t$fp" }
     if (force || !intact(fs, qdir, head)) {

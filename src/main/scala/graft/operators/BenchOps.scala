@@ -39,15 +39,20 @@ object BenchOps {
     * DuckDB's `parquet_schema()` independently re-derives every field
     * for the oracle.
     */
-  def k14LogicalTypes(spark: SparkSession, sfDir: String): DataFrame = {
-    val file = s"$workRoot/ltypes/typed.parquet"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(file)
-    if (!p.getFileSystem(conf).exists(p))
-      ParquetKnobs.writeLogicalTypesFixture(conf, file)
-    FooterMeta.logicalTypes(spark, Seq(file)).toDF()
+  def k14LogicalTypes(spark: SparkSession, sfDir: String): DataFrame =
+    FooterMeta.logicalTypes(spark, Seq(s"${ensureLtypes(spark)}/typed.parquet")).toDF()
       .orderBy("column")
-  }
+
+  /** Stages the two parquet-mr fixtures of K14 and K15
+    * (`typed.parquet`, `fieldids.parquet`) as one layer; returns its
+    * directory, which the oracles address textually.
+    */
+  private def ensureLtypes(spark: SparkSession): String =
+    graft.Staged.at(spark, s"$workRoot/ltypes", Nil) { dir =>
+      val conf = spark.sessionState.newHadoopConf()
+      ParquetKnobs.writeLogicalTypesFixture(conf, s"$dir/typed.parquet")
+      ParquetKnobs.writeFieldIdFixture(conf, s"$dir/fieldids.parquet")
+    }
 
   /** K15 — parquet field-ID round-trip census: write IDs through the
     * writer, read them back distributed, and have DuckDB's independent
@@ -58,14 +63,9 @@ object BenchOps {
     * `spark.sql.parquet.fieldId.read.enabled` is on; the census proves
     * the footer carries what that resolution needs.
     */
-  def k15FieldIds(spark: SparkSession, sfDir: String): DataFrame = {
-    val file = s"$workRoot/ltypes/fieldids.parquet"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(file)
-    if (!p.getFileSystem(conf).exists(p))
-      ParquetKnobs.writeFieldIdFixture(conf, file)
-    FooterMeta.fieldIds(spark, Seq(file)).toDF().orderBy("column")
-  }
+  def k15FieldIds(spark: SparkSession, sfDir: String): DataFrame =
+    FooterMeta.fieldIds(spark, Seq(s"${ensureLtypes(spark)}/fieldids.parquet")).toDF()
+      .orderBy("column")
 
   /** S4 — footer metadata Dataset over every table in sfDir (timings
     * dropped for deterministic rows).
@@ -400,20 +400,11 @@ object BenchOps {
   def m2ChunksPages(spark: SparkSession, sfDir: String): DataFrame =
     BenchRunners.chunksAndPagesBenchmark(spark, MetaCols, 10000L, s"$workRoot/meta")
 
-  /** Stats decode benchmark — reuses m2's generated files when present
-    * (the alphabetical bench order guarantees m2_chunks_pages ran first
-    * in the same process; the existence check keeps it standalone).
+  /** Stats decode benchmark over m2's staged files (built here when
+    * m2_chunks_pages has not staged them yet).
     */
-  def m2Stats(spark: SparkSession, sfDir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val missing = MetaCols.exists { nc =>
-      val p = new org.apache.hadoop.fs.Path(s"$workRoot/meta/meta_bench_${nc}cols")
-      !p.getFileSystem(conf).exists(p)
-    }
-    if (missing)
-      BenchRunners.chunksAndPagesBenchmark(spark, MetaCols, 10000L, s"$workRoot/meta")
+  def m2Stats(spark: SparkSession, sfDir: String): DataFrame =
     BenchRunners.statsBenchmark(spark, MetaCols, 10000L, s"$workRoot/meta")
-  }
 
   /** Row-group × page-size grid (verify-scale slice of the 128-config
     * reference grid).
@@ -1309,7 +1300,7 @@ object BenchOps {
     // 1000-col width-probe twin: footer layout + first/last column
     // extrema from DuckDB's independent decoder
     "m6_wide_layout" -> {
-      val p = s"$workRoot/wide/wide_probe_${WideProbeCols}cols"
+      val p = s"$workRoot/wide/wide_probe_${WideProbeCols}c_${WideProbeRows}n_1p"
       s"""SELECT
          | (SELECT count(DISTINCT column_id) FROM parquet_metadata('$p/*.parquet'))::INT AS num_columns,
          | (SELECT count(*) FROM '$p/*.parquet')::BIGINT AS num_rows,
@@ -1347,7 +1338,7 @@ object BenchOps {
       }.mkString("", "\nUNION ALL\n", "\nORDER BY config")
     },
     "m6_wide10k_layout" -> {
-      val p = s"$workRoot/wide/wide_probe_${Wide10kCols}cols"
+      val p = s"$workRoot/wide/wide_probe_${Wide10kCols}c_${Wide10kRows}n_1p"
       s"""SELECT
          | (SELECT count(DISTINCT column_id) FROM parquet_metadata('$p/*.parquet'))::INT AS num_columns,
          | (SELECT count(*) FROM '$p/*.parquet')::BIGINT AS num_rows,
@@ -1362,7 +1353,7 @@ object BenchOps {
     // every column from the same files; n_subset_cols is the probe's
     // fixed 1-in-(nc/10) projection width
     "m6_wide_probe" -> {
-      val p = s"$workRoot/wide/wide_probe_${WideProbeCols}cols"
+      val p = s"$workRoot/wide/wide_probe_${WideProbeCols}c_${WideProbeRows}n_1p"
       s"""SELECT
          | (SELECT count(DISTINCT column_id) FROM parquet_metadata('$p/*.parquet'))::INT AS num_columns,
          | (SELECT count(*) FROM '$p/*.parquet')::BIGINT AS num_rows,
@@ -1370,7 +1361,7 @@ object BenchOps {
          | 10::INT AS n_subset_cols""".stripMargin
     },
     "m6_wide10k_probe" -> {
-      val p = s"$workRoot/wide/wide_probe_${Wide10kCols}cols"
+      val p = s"$workRoot/wide/wide_probe_${Wide10kCols}c_${Wide10kRows}n_1p"
       s"""SELECT
          | (SELECT count(DISTINCT column_id) FROM parquet_metadata('$p/*.parquet'))::INT AS num_columns,
          | (SELECT count(*) FROM '$p/*.parquet')::BIGINT AS num_rows,
@@ -1400,7 +1391,7 @@ object BenchOps {
          |ORDER BY pushdown_enabled""".stripMargin
     },
     "s3_read_counts" -> ReadCols.map { nc =>
-      val p = s"$workRoot/read/read_bench_${nc}cols"
+      val p = s"$workRoot/read/read_bench_${nc}c_${ReadRows}n_s42"
       s"""SELECT
          | (SELECT count(DISTINCT column_id) FROM parquet_metadata('$p/*.parquet'))::INT AS num_columns,
          | (SELECT count(*) FROM '$p/*.parquet')::BIGINT AS num_rows,

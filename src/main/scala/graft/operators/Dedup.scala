@@ -478,9 +478,10 @@ object Dedup {
     * changes the fingerprint and rebuilds.
     */
   private[graft] def clusterModelDir(spark: SparkSession, sfDir: String): String =
-    graft.Staged.path(spark,
-      s"dedup/clusters_${new java.io.File(sfDir).getName}_${hashFamily(spark)}",
-      Seq(s"$sfDir/documents.parquet"))
+    graft.Staged.path(spark, clusterLayer(spark, sfDir), Seq(s"$sfDir/documents.parquet"))
+
+  private def clusterLayer(spark: SparkSession, sfDir: String): String =
+    s"dedup/clusters_${new java.io.File(sfDir).getName}_${hashFamily(spark)}"
 
   /** The staged cluster model ([[graft.Staged]]). The BUILD cost stays
     * on the build query (`x_dedup_clusters` always rebuilds it);
@@ -489,7 +490,7 @@ object Dedup {
     * and applies them on every downstream pass.
     */
   private[graft] def ensureClusterModel(spark: SparkSession, sfDir: String): String =
-    graft.Staged.at(spark, clusterModelDir(spark, sfDir), Seq(s"$sfDir/documents.parquet"))(
+    graft.Staged.dir(spark, clusterLayer(spark, sfDir), Seq(s"$sfDir/documents.parquet"))(
       buildClusterModel(spark, sfDir, _))
 
   /** Near-dup CLUSTER formation — the step an actual dedup pipeline
@@ -530,8 +531,8 @@ object Dedup {
     // handed back is ALWAYS file-backed — downstream joins see a
     // parquet relation whether the build ran the driver fast path or
     // the distributed loop.
-    val dir = graft.Staged.rebuild(spark, clusterModelDir(spark, sfDir),
-      Seq(s"$sfDir/documents.parquet"))(buildClusterModel(spark, sfDir, _))
+    val dir = graft.Staged.dir(spark, clusterLayer(spark, sfDir),
+      Seq(s"$sfDir/documents.parquet"), rebuild = true)(buildClusterModel(spark, sfDir, _))
     spark.read.parquet(s"$dir/clusters").orderBy("keep_id")
   }
 
@@ -1364,13 +1365,14 @@ object Dedup {
     * bucket-partitioned on (band, bucket) for probe-side pruning.
     */
   private[graft] def baseIndexDir(spark: SparkSession, sfDir: String): String =
-    graft.Staged.path(spark,
-      s"dedup/base_${new java.io.File(sfDir).getName}_${hashFamily(spark)}",
-      Seq(s"$sfDir/documents.parquet"))
+    graft.Staged.path(spark, baseIndexLayer(spark, sfDir), Seq(s"$sfDir/documents.parquet"))
+
+  private def baseIndexLayer(spark: SparkSession, sfDir: String): String =
+    s"dedup/base_${new java.io.File(sfDir).getName}_${hashFamily(spark)}"
 
   private def ensureBaseIndex(spark: SparkSession, sfDir: String,
       isNew: Column => Column): String =
-    graft.Staged.at(spark, baseIndexDir(spark, sfDir), Seq(s"$sfDir/documents.parquet")) { dir =>
+    graft.Staged.dir(spark, baseIndexLayer(spark, sfDir), Seq(s"$sfDir/documents.parquet")) { dir =>
       val base = shingled(spark, sfDir).filter(!isNew(col("doc_id")))
       base.select(col("doc_id"), md5(col("text")).as("fp"))
         .select("fp").distinct()

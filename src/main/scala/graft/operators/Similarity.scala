@@ -615,13 +615,14 @@ object Similarity {
     * [[ivfTopK]] (spec-asserted) and share its retrain oracle.
     */
   private[graft] def ivfLayoutPath(spark: SparkSession, sfDir: String): String =
-    graft.Staged.path(spark, s"ann/ivf_mf_${new java.io.File(sfDir).getName}",
-      Seq(s"$sfDir/embeddings.parquet"))
+    graft.Staged.path(spark, ivfLayer(sfDir), Seq(s"$sfDir/embeddings.parquet"))
+
+  private def ivfLayer(sfDir: String): String = s"ann/ivf_mf_${new java.io.File(sfDir).getName}"
 
   def ivfBucketedTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val base = corpus(spark, sfDir)
     val cents = trainedCentroids(spark, sfDir, base)
-    val out = graft.Staged.at(spark, ivfLayoutPath(spark, sfDir),
+    val out = graft.Staged.dir(spark, ivfLayer(sfDir),
         Seq(s"$sfDir/embeddings.parquet")) { out =>
       // LAKE-SHAPED fixture: hash-spread each inverted list across
       // LayoutFiles writer tasks so every list_id directory holds
@@ -927,8 +928,10 @@ object Similarity {
     * staleness spec.
     */
   private[graft] def bucketedLayoutPath(spark: SparkSession, sfDir: String): String =
-    graft.Staged.path(spark, s"ann/banded_mf_${new java.io.File(sfDir).getName}",
-      Seq(s"$sfDir/embeddings.parquet"))
+    graft.Staged.path(spark, bucketedLayer(sfDir), Seq(s"$sfDir/embeddings.parquet"))
+
+  private def bucketedLayer(sfDir: String): String =
+    s"ann/banded_mf_${new java.io.File(sfDir).getName}"
 
   /** Writer tasks per bucketed-layout write: each bucket directory ends
     * up with up to this many parquet files (hash-spread on vec_id), the
@@ -939,7 +942,7 @@ object Similarity {
 
   def lshBucketedTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val out = graft.Staged.at(spark, bucketedLayoutPath(spark, sfDir),
+    val out = graft.Staged.dir(spark, bucketedLayer(sfDir),
         Seq(s"$sfDir/embeddings.parquet")) { out =>
       // many-files-per-bucket lake fixture — see ivfBucketedTopK's note
       bandedCorpus(spark, sfDir)

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Random
-import scala.util.control.NonFatal
 
 /** The reference's benchmark executables re-expressed as Spark jobs that
   * emit result DataFrames with the reference's CSV columns (FIXTURES.md
@@ -50,35 +49,37 @@ object BenchRunners {
     (med(samples.map(_._1)), med(samples.map(_._2)), samples.head._3)
   }
 
-  /** True when `path` already holds a generated wide table with exactly
-    * `nc` fields and `numRows` total rows, in exactly one file when
-    * `singleFile` (a fixture written before its generator went to one
-    * partition must be rebuilt, not reused). WideTableGen is deterministic
-    * (fixed seed), so a matching file IS the file a regeneration would
-    * produce — the metadata benchmarks measure footer DECODE, and the
-    * reference likewise generates each grid file once and then times
-    * decode in a loop (src/metadata_benchmark.cc:232-246), so skipping
-    * an identical rewrite keeps the measured quantity honest while
-    * cutting the 1000-col write out of every repeat.
+  /** The wide tables below are staged once per generator parameter set
+    * ([[graft.Staged]]): WideTableGen is deterministic, so a staged file
+    * IS the file a regeneration would produce. The metadata benchmarks
+    * measure footer DECODE, and the reference likewise generates each
+    * grid file once and then times decode in a loop
+    * (src/metadata_benchmark.cc:232-246), so reuse keeps the measured
+    * quantity honest while cutting the wide write out of every repeat.
+    *
+    * The snappy table [[dataReadBenchmark]] times and
+    * [[readBenchCounts]] checks.
     */
-  private def wideFileMatches(spark: SparkSession, path: String, nc: Int, numRows: Long,
-      singleFile: Boolean = false): Boolean = {
-    val conf = FooterMeta.sessionConf(spark).value
-    val p = new Path(path)
-    try {
-      if (!p.getFileSystem(conf).exists(p)) return false
-      val files = FooterMeta.parquetFiles(conf, path)
-      if (files.isEmpty || (singleFile && files.size != 1)) return false
-      var totalRows = 0L
-      var fieldCount = -1
-      files.foreach { f =>
-        val footer = FooterMeta.footer(conf, f).meta
-        fieldCount = footer.getFileMetaData.getSchema.getFieldCount
-        totalRows += footer.getBlocks.asScala.map(_.getRowCount).sum
-      }
-      fieldCount == nc && totalRows == numRows
-    } catch { case NonFatal(_) => false }
-  }
+  private def readBenchFile(
+      spark: SparkSession, nc: Int, numRows: Long, seed: Long, workDir: String): String =
+    graft.Staged.at(spark, s"$workDir/read_bench_${nc}c_${numRows}n_s$seed", Nil)(
+      ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, seed), _,
+        ParquetKnobs.WriteConfig(codec = "snappy")))
+
+  /** The table [[chunksAndPagesBenchmark]] and [[statsBenchmark]] decode. */
+  private def metaBenchFile(spark: SparkSession, nc: Int, numRows: Long, workDir: String): String =
+    graft.Staged.at(spark, s"$workDir/meta_bench_${nc}c_${numRows}n", Nil)(
+      ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows), _, ParquetKnobs.WriteConfig()))
+
+  /** The one-file snappy table [[wideFooterProbe]] times and [[wideLayout]]
+    * checks. One generator partition: one nc-column file instead of 32
+    * three-row ones, whose cold build was dominated by per-file
+    * column-writer/footer overhead (see WideTableGen.wide).
+    */
+  private def wideProbeFile(spark: SparkSession, nc: Int, numRows: Long, workDir: String): String =
+    graft.Staged.at(spark, s"$workDir/wide_probe_${nc}c_${numRows}n_1p", Nil)(
+      ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, numPartitions = 1), _,
+        ParquetKnobs.WriteConfig(codec = "snappy")))
 
   /** One throwaway footer open before any timed measurement: the first
     * footer open in a JVM pays parquet-hadoop class loading
@@ -161,10 +162,7 @@ object BenchRunners {
       seed: Long = 42L): DataFrame = {
     import spark.implicits._
     val rows = numColsList.map { nc =>
-      val path = s"$workDir/read_bench_${nc}cols"
-      if (!wideFileMatches(spark, path, nc, numRows))
-        ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, seed), path,
-          ParquetKnobs.WriteConfig(codec = "snappy"))
+      val path = readBenchFile(spark, nc, numRows, seed, workDir)
       val (thriftUs, schemaUs, _) = footerTimesUs(spark, path)
       val df = spark.read.parquet(path)
       val (_, fullMs) = timeMs(materialize(df))
@@ -193,10 +191,7 @@ object BenchRunners {
       statsLevel: Int = 1): DataFrame = {
     import spark.implicits._
     val rows = numColsList.map { nc =>
-      val path = s"$workDir/meta_bench_${nc}cols"
-      if (!wideFileMatches(spark, path, nc, numRows))
-        ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows), path,
-          ParquetKnobs.WriteConfig())
+      val path = metaBenchFile(spark, nc, numRows, workDir)
       val (thriftUs, schemaUs, _) = footerTimesUs(spark, path)
       (nc, thriftUs + schemaUs, thriftUs, schemaUs, dirBytes(spark, path), statsLevel)
     }
@@ -216,7 +211,7 @@ object BenchRunners {
     import spark.implicits._
     val conf = FooterMeta.sessionConf(spark).value
     val rows = numColsList.map { nc =>
-      val path = s"$workDir/meta_bench_${nc}cols" // shares files with chunksAndPages
+      val path = metaBenchFile(spark, nc, numRows, workDir)
       val file = FooterMeta.parquetFiles(conf, path).head
       val footer = FooterMeta.footer(conf, file).meta
       val t0 = System.nanoTime()
@@ -462,20 +457,14 @@ object BenchRunners {
     * (src/metadata_benchmark.cc:233 sweeps widths to 10,000) but the
     * gated grids stop at 100 cols, so width regressions between rounds
     * were only visible in one-off BASELINE_QUALITATIVE runs. The wide
-    * file is generated ONCE ([[wideFileMatches]] gate); each round then
+    * file is generated ONCE ([[wideProbeFile]]); each round then
     * pays a median-of-5 footer decode (~ms at 1000 cols) plus one
     * 10-column subset read over the small file — cheap by construction.
     */
   def wideFooterProbe(
       spark: SparkSession, nc: Int, numRows: Long, workDir: String): DataFrame = {
     import spark.implicits._
-    val path = s"$workDir/wide_probe_${nc}cols"
-    // single-partition generation (r14): one nc-column file instead of
-    // 32 three-row ones — the cold fixture build was dominated by
-    // per-file column-writer/footer overhead (see WideTableGen.wide)
-    if (!wideFileMatches(spark, path, nc, numRows, singleFile = true))
-      ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, numPartitions = 1), path,
-        ParquetKnobs.WriteConfig(codec = "snappy"))
+    val path = wideProbeFile(spark, nc, numRows, workDir)
     val (thriftUs, schemaUs, nColsRead) = footerTimesUs(spark, path)
     val df = spark.read.parquet(path)
     val subset = (0 until nc by math.max(1, nc / 10)).map(i => s"col_$i")
@@ -502,12 +491,7 @@ object BenchRunners {
       spark: SparkSession, nc: Int, numRows: Long, workDir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max => fmax, min => fmin}
     import spark.implicits._
-    val path = s"$workDir/wide_probe_${nc}cols"
-    // identical write to wideFooterProbe's — the two build-if-absent
-    // gates share this fixture and must produce the same bytes
-    if (!wideFileMatches(spark, path, nc, numRows, singleFile = true))
-      ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, numPartitions = 1), path,
-        ParquetKnobs.WriteConfig(codec = "snappy"))
+    val path = wideProbeFile(spark, nc, numRows, workDir)
     val conf = FooterMeta.sessionConf(spark).value
     val nGroups = FooterMeta.footer(conf, FooterMeta.parquetFiles(conf, path).head)
       .meta.getBlocks.size
@@ -528,9 +512,7 @@ object BenchRunners {
     import org.apache.spark.sql.functions.{count, lit, max => fmax, min => fmin}
     import spark.implicits._
     val rows = numColsList.map { nc =>
-      val path = graft.Staged.at(spark, s"$workDir/read_bench_${nc}cols", Nil)(
-        ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, seed), _,
-          ParquetKnobs.WriteConfig(codec = "snappy")))
+      val path = readBenchFile(spark, nc, numRows, seed, workDir)
       val r = spark.read.parquet(path)
         .agg(count(lit(1)), fmin("col_0"), fmax("col_0")).first()
       (nc, r.getLong(0), math.max(1, nc / 2), (nc + 9) / 10,

@@ -432,22 +432,20 @@ object EventStreams {
     * result must STILL equal the batch answer for all closed windows,
     * so it shares [[streamWindowAppend]]'s oracle.
     *
-    * The sink directory is keyed on the source fingerprint and staged
-    * against the input layer ([[graft.Staged]]), rebuilt from a fresh
-    * checkpoint when absent or stale; the read-back goes through
+    * The sink directory is a layer keyed on the source fingerprint
+    * ([[graft.Staged]]), rebuilt from a fresh checkpoint over the
+    * staged input when absent or stale; the read-back goes through
     * the commit log (Spark lists `_spark_metadata`, not the raw
     * directory), which is what makes concurrent-writer garbage
     * invisible to readers at scale.
     */
   def streamFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val events = s"$sfDir/events.parquet"
-    val stageDir = stagedAppendDir(spark, sfDir)
-    val outDir = graft.Staged.at(spark, graft.Staged.path(spark, "stream/events_filesink",
-        Seq(events)), Seq(events, stageDir)) { outDir =>
+    val outDir = graft.Staged.dir(spark, "stream/events_filesink",
+        Seq(s"$sfDir/events.parquet")) { outDir =>
       val src = normTs(spark.readStream
         .schema(rawSchema(rawTsType(spark, sfDir)))
         .option("maxFilesPerTrigger", "1")
-        .parquet(stageDir))
+        .parquet(stagedAppendDir(spark, sfDir)))
       val agg = src
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
@@ -1400,11 +1398,8 @@ object EventStreams {
     */
   def streamUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
-    val events = s"$sfDir/events.parquet"
-    val outDir = graft.Staged.at(spark, graft.Staged.path(spark, "stream/events_upsert",
-        Seq(events)), Seq(events, upsertStageDir(spark, sfDir))) { outDir =>
-      upsertRun(spark, sfDir, outDir, _ => ())
-    }
+    val outDir = graft.Staged.dir(spark, "stream/events_upsert",
+        Seq(s"$sfDir/events.parquet"))(upsertRun(spark, sfDir, _, _ => ()))
     val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val last = fs.listStatus(new Path(outDir)).map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))

@@ -135,6 +135,24 @@ class StagedSpec extends AnyFunSuite {
     }
   }
 
+  test("a file system set at runtime reaches Staged through the session conf") {
+    val dir = fresh("session-conf")
+    val layer = new Layer(dir)
+    // only the session conf carries runtime keys; an uncached scheme
+    // makes every FileSystem opened through it a fresh StagedProbeFs
+    spark.conf.set("fs.file.impl", classOf[StagedProbeFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      assert(layer.stage() === 1)
+      assert(layer.stage() === 1)
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+    assert(StagedProbeFs.seen.contains(s"$dir/_STAGED"),
+      "Staged must check the layer through the file system the session sets at runtime")
+  }
+
   test("a moved work dir rebuilds merge-on-read and file-sink layers that hold absolute paths") {
     val a = fresh("moved-a")
     val b = fresh("moved-b")
@@ -203,4 +221,16 @@ class StagedSpec extends AnyFunSuite {
       "the stream schema must follow the rewritten file")
     fs.delete(new Path(root), true)
   }
+}
+
+/** The local file system, recording every path it is asked about. */
+class StagedProbeFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def exists(f: Path): Boolean = {
+    StagedProbeFs.seen.add(f.toUri.getPath)
+    super.exists(f)
+  }
+}
+
+object StagedProbeFs {
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
